@@ -36,48 +36,35 @@ object Tables {
     * — at 100 TB this is the identity. Catalyst pushes predicates and
     * column pruning through RepartitionByExpression, so PushedFilters/
     * ReadSchema at the scan are unchanged. The decision (one listing +
-    * file stats) is memoized per (app, path, parallelism).
+    * file stats) is cached per (app, path, parallelism).
     */
-  /** `SPARK_GRAFT_SPREAD=off` disables the floor (A/B validation knob —
-    * the r18 verdict asked for driver-shape evidence the floor wins).
-    */
-  private val spreadEnabled =
-    !sys.env.get("SPARK_GRAFT_SPREAD").contains("off")
-  /** Memo VALUE carries the (fileCount, totalBytes) the decision was
-    * derived from (r18 advice): a fixture dir rewritten mid-application
-    * re-derives instead of serving a stale decision, and a listing/stat
-    * failure skips the floor for this call rather than memoizing a
-    * decision built on 0-length fallbacks.
-    */
-  private val spreadMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Long, Boolean)]
   private def spread(s: SparkSession, dir: String, name: String,
                      df: DataFrame, keyName: String): DataFrame = {
     val p = s.sparkContext.defaultParallelism
     // test fixtures ship slimmer schemas (e.g. events without
     // event_id) — a missing key column just skips the floor
-    if (!spreadEnabled || !df.columns.contains(keyName)) return df
+    if (!df.columns.contains(keyName)) return df
     val files = df.inputFiles
     if (files.isEmpty) return df
-    val key = s"${s.sparkContext.applicationId}#$dir/$name#$p"
-    val narrow = spreadMemo.get(key) match {
-      case Some((n, _, dec)) if n == files.length => dec
-      case _ =>
-        try {
-          val fs = new org.apache.hadoop.fs.Path(files.head)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
-          val bytes = files.map { f =>
-            fs.getFileStatus(new org.apache.hadoop.fs.Path(new java.net.URI(f))).getLen
-          }.sum
-          val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
-          // even with perfect row-group alignment the scan cannot
-          // produce p splits from these bytes — the one case where an
-          // up-front redistribution is the only way to use the machine
-          val dec = files.length < p && math.max(files.length.toLong, bytes / maxSplit) < p
-          spreadMemo.put(key, (files.length.toLong, bytes, dec))
-          dec
-        } catch { case _: Throwable => false } // stat failure: skip, don't memoize
-    }
+    // versioned by the file count (r18 advice): a fixture dir rewritten
+    // mid-application re-derives instead of serving a stale decision; a
+    // listing/stat failure skips the floor for this call rather than
+    // caching a decision built on 0-length fallbacks
+    val narrow =
+      try graft.ext.ArtifactCache.get(s.sparkContext, s"spread#$dir/$name#$p",
+          files.length.toString) {
+        val fs = new org.apache.hadoop.fs.Path(files.head)
+          .getFileSystem(s.sparkContext.hadoopConfiguration)
+        val bytes = files.map { f =>
+          fs.getFileStatus(new org.apache.hadoop.fs.Path(new java.net.URI(f))).getLen
+        }.sum
+        val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
+        // even with perfect row-group alignment the scan cannot
+        // produce p splits from these bytes — the one case where an
+        // up-front redistribution is the only way to use the machine
+        graft.ext.ArtifactCache.Entry(
+          files.length < p && math.max(files.length.toLong, bytes / maxSplit) < p)
+      } catch { case _: Throwable => false }
     if (narrow) df.repartition(p, col(keyName)) else df
   }
 

@@ -112,13 +112,12 @@ object Warm {
     // Dependency chains (see [[runChains]]): an artifact and everything
     // that reads or re-ensures its directory share one chain —
     //  - dupgroups keys on the neardup pair artifact;
-    //  - warmVocab primes the session memo of its just-ensured LM;
+    //  - warmVocab primes the cached vocab of its just-ensured LM;
     //  - streamCurated internally ensures unigram_lm_seed
     //    (stream_curated_corpus's quality gate scores against it);
     //  - the serving store build ensures the media feature store
     //    (KeyValue.scala's media profile family), so serving and
-    //    servingDaily follow mediaFeatures;
-    //  - mediaFiles/mediaGateSpool share one memo lock.
+    //    servingDaily follow mediaFeatures.
     runChains(spark, Seq(
       Seq("neardup" -> (() => Dedup.ensurePairs(spark, docs, s"${Artifact.root(d)}/neardup")),
         "dupgroups" -> (() => Dedup.ensureGroups(spark, s"${Artifact.root(d)}/neardup",
@@ -135,7 +134,7 @@ object Warm {
         s"${Artifact.root(d)}/containment_corpus"))),
       Seq("shards" -> (() => graft.ext.TrainingSet.writeShards(spark, docs,
         s"${Artifact.root(d)}/shards"))),
-      // prime the session vocab memos right after each LM: the first
+      // prime the cached vocabs right after each LM: the first
       // scorer would otherwise pay the one-time ledger netting inside
       // its own per-query measurement
       Seq("unigram_lm" -> (() => graft.ext.LanguageModel.ensureLm(spark, docs,
@@ -194,10 +193,10 @@ object Warm {
       // written and streamed once here; the query measures the
       // replay-storm serve
       Seq("streamMedia" -> (() => graft.stream.StreamQueries.ensureMediaIngest(spark, d))),
-      // session-memoized (not persisted — see Bpe's class doc): trained
+      // cached per application (see Bpe.trained): loaded
       // here so no bpe_* query pays the training cost as first consumer
       Seq("bpe" -> (() => graft.ext.Bpe.trained(spark, docs, d))),
-      // release-chain memo: one text-release pass now serves two
+      // release-chain cache: one text-release pass now serves two
       // registered queries (corpus_release, corpus_release_mm)
       Seq("release" -> (() => graft.ext.Release.releaseCached(spark, docs))),
       Seq("ann:ivf" -> (() => AnnIndex.ensureIvf(spark, emb, s"${AnnIndex.defaultRoot(d)}/ivf_c16"))),

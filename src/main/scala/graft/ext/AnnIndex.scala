@@ -701,27 +701,25 @@ object AnnIndex {
       .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
-  /** Session memo for the tiny driver-side quantizer tables (r19): the
-    * recall report and every sim_* serve re-collected the same
-    * centroid/codebook parquet per call (2 driver jobs each). Keyed on
-    * (session, path, file listing sizes+mtimes) — a rebuilt index
-    * rewrites its files and re-keys, so a hit is exactly the recollect.
+  /** Cache for the tiny driver-side quantizer tables (r19): the recall
+    * report and every sim_* serve re-collected the same centroid/
+    * codebook parquet per call (2 driver jobs each). Versioned by the
+    * file listing (sizes+mtimes) — a rebuilt index rewrites its files,
+    * so a hit is exactly the recollect. A listing failure loads uncached.
     */
-  private val driverTableMemo =
-    scala.collection.concurrent.TrieMap.empty[String, AnyRef]
   private def memoizedLoad[A <: AnyRef](spark: SparkSession, path: String,
                                         tag: String)(load: => A): A = {
-    val key =
+    val listing =
       try {
         val p = new org.apache.hadoop.fs.Path(path)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val listing = fs.listStatus(p).map(st =>
+        Some(fs.listStatus(p).map(st =>
             s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
-          .sorted.mkString("|")
-        Some(s"${System.identityHashCode(spark)}#$tag#$path#$listing")
+          .sorted.mkString("|"))
       } catch { case _: Throwable => None }
-    key match {
-      case Some(k) => driverTableMemo.getOrElseUpdate(k, load).asInstanceOf[A]
+    listing match {
+      case Some(v) =>
+        ArtifactCache.get(spark.sparkContext, s"ann-$tag#$path", v)(ArtifactCache.Entry(load))
       case None => load
     }
   }

@@ -32,60 +32,58 @@ private[graft] object Artifact {
     * hash-sum is additive (exploited by the append paths) but thereby
     * collision-weakened — a freshness guard, never a correctness check.
     *
-    * Session-memoized for deterministic, fully FILE-BACKED frames
-    * (r18 optimization): every artifact serve pays this scan for its
-    * freshness check, and one bench session fingerprints the same
-    * handful of fixture-derived frames 60+ times. When the frame's
-    * content is provably a pure function of its input files
-    * ([[org.apache.spark.sql.graftbridge.bridge.deterministicFileKey]]:
-    * all leaves are file relations, no non-deterministic expression),
-    * the result is memoized under (session, canonical plan, columns,
-    * input file paths+sizes+mtimes). A rewritten input can never
-    * collide with its old key — Spark part-file names are unique per
-    * write, and size/mtime guard hand-written files — so a memo hit is
-    * exactly the value a recompute would produce. Non-file-backed or
-    * non-deterministic plans (localCheckpoints, in-memory test frames,
-    * rand()) always recompute, and so do scans over more than 4096
-    * input files (per-file stat cost would rival the scan).
+    * Cached per application for file-determined frames
+    * ([[cachedByInputFiles]], r18 optimization): every artifact serve
+    * pays this scan for its freshness check, and one bench session
+    * fingerprints the same handful of fixture-derived frames 60+ times.
     */
-  def fingerprint(df: DataFrame, cols: Column*): String = {
-    def compute(): String = {
+  def fingerprint(df: DataFrame, cols: Column*): String =
+    cachedByInputFiles(df, s"fingerprint:${cols.mkString(",")}") {
       val r = df.agg(count(lit(1)), sum(xxhash64(cols: _*))).head()
       s"${r.getLong(0)}:${if (r.isNullAt(1)) 0L else r.getLong(1)}"
     }
-    deterministicMemoKey(df, cols.mkString(",")) match {
-      case Some(key) => fpMemo.getOrElseUpdate(key, compute())
-      case None => compute()
+
+  /** `compute`, cached in [[ArtifactCache]] per SparkContext when the
+    * frame's content is provably a pure function of its input files
+    * ([[org.apache.spark.sql.graftbridge.bridge.deterministicFileKey]]:
+    * all leaves are file relations, no non-deterministic expression).
+    * The name pins `tag` and the canonical plan, the version is the
+    * input listing ([[inputListing]]). A rewritten input can never
+    * serve its old value — Spark part-file names are unique per write,
+    * and size/mtime guard hand-written files — so a hit is exactly the
+    * value a recompute would produce. Other frames (localCheckpoints,
+    * in-memory test frames, rand()) always recompute.
+    */
+  private[graft] def cachedByInputFiles[V](df: DataFrame, tag: String)(compute: => V): V =
+    org.apache.spark.sql.graftbridge.bridge.deterministicFileKey(df)
+      .flatMap(plan => inputListing(df).map(plan -> _)) match {
+      case Some((plan, listing)) =>
+        ArtifactCache.get(df.sparkSession.sparkContext, s"$tag#${digest(plan)}", listing)(
+          ArtifactCache.Entry(compute))
+      case None => compute
+    }
+
+  /** Digest of the frame's input files (paths, sizes, mtimes); `None`
+    * for frames with no input files or more than 4096 of them (per-file
+    * stat cost would rival a scan). The version of caches whose value
+    * derives from a fixture table.
+    */
+  private[graft] def inputListing(df: DataFrame): Option[String] = {
+    val files = df.inputFiles
+    if (files.isEmpty || files.length > 4096) None
+    else {
+      val conf = df.sparkSession.sparkContext.hadoopConfiguration
+      Some(digest(files.sorted.map { f =>
+        val p = new Path(f)
+        val st = p.getFileSystem(conf).getFileStatus(p)
+        s"$f:${st.getLen}:${st.getModificationTime}"
+      }.mkString("|")))
     }
   }
 
-  /** The (session, canonical plan, tag, input file paths+sizes+mtimes)
-    * memo key behind [[fingerprint]]'s session memo, exposed for other
-    * deterministic per-input guards (e.g. [[MediaDedup]]'s id-headroom
-    * check): `Some(key)` exactly when a memo hit is provably the value
-    * a recompute would produce — the frame is a deterministic function
-    * of its input files and the file listing pins data identity.
-    */
-  private[ext] def deterministicMemoKey(df: DataFrame, tag: String): Option[String] =
-    org.apache.spark.sql.graftbridge.bridge.deterministicFileKey(df).flatMap { planKey =>
-      val files = df.inputFiles
-      if (files.isEmpty || files.length > 4096) None
-      else {
-        val conf = df.sparkSession.sparkContext.hadoopConfiguration
-        val listing = files.sorted.map { f =>
-          val p = new Path(f)
-          val st = p.getFileSystem(conf).getFileStatus(p)
-          s"$f:${st.getLen}:${st.getModificationTime}"
-        }.mkString("|")
-        Some(java.util.UUID.nameUUIDFromBytes(
-          (System.identityHashCode(df.sparkSession).toString + "§" + planKey + "§" +
-            tag + "§" + listing).getBytes("UTF-8")).toString)
-      }
-    }
-
-  // fingerprint memo: value strings are tiny; growth is bounded by
-  // distinct (plan, file-set) pairs ever fingerprinted in the JVM
-  private val fpMemo = scala.collection.concurrent.TrieMap.empty[String, String]
+  // md5-based name-UUID: short and deterministic
+  private def digest(s: String): String =
+    java.util.UUID.nameUUIDFromBytes(s.getBytes("UTF-8")).toString
 
   /** File-level fingerprint over input table paths: a digest of every
     * file's (path relative to its input root, size, modification time) —
@@ -112,9 +110,7 @@ private[graft] object Artifact {
         walk(fs.getFileStatus(p))
       }
     }
-    // md5-based name-UUID keeps the meta line short and deterministic
-    java.util.UUID.nameUUIDFromBytes(
-      entries.sorted.mkString("|").getBytes("UTF-8")).toString
+    digest(entries.sorted.mkString("|"))
   }
 
   private def fsPath(spark: SparkSession, dir: String, name: String): (FileSystem, Path) = {
@@ -230,7 +226,7 @@ private[graft] object Artifact {
     * amortized over the many queries a built artifact serves.
     */
   def ensure(spark: SparkSession, dir: String, meta: String)(build: => Unit): String =
-    ensureLockFor(dir).synchronized {
+    withDirLock(dir) {
       if (hasPendingMutation(spark, dir) || !readMeta(spark, dir).contains(meta)) {
         build
         endMutation(spark, dir)
@@ -239,23 +235,14 @@ private[graft] object Artifact {
       dir
     }
 
-  /** Per-directory build lock (r18 advice): the parallel warm phase
-    * runs `ensure` chains concurrently, and chain/directory
-    * disjointness was a hand-maintained comment-level invariant — a
-    * future regrouping that lands two ensures of one dir in different
-    * chains would race build/endMutation/writeMeta and could corrupt an
-    * artifact silently. One JVM-wide lock object per normalized dir
-    * makes concurrent ensures of the same artifact serialize (the
-    * second call then sees the fresh meta and no-ops); distinct dirs
-    * stay fully parallel.
+  /** Run `body` under the JVM-wide lock of an artifact directory (r18
+    * advice): the parallel warm phase runs `ensure` chains
+    * concurrently, and a streaming refresh races lookups, so two
+    * builders of one artifact must serialize — the second then sees the
+    * fresh meta and no-ops. Distinct dirs stay fully parallel.
     */
-  private val ensureLocks =
-    scala.collection.concurrent.TrieMap.empty[String, AnyRef]
-  private def ensureLockFor(dir: String): AnyRef = {
-    val key = new Path(dir).toString
-    ensureLocks.putIfAbsent(key, new Object)
-    ensureLocks(key)
-  }
+  def withDirLock[T](dir: String)(body: => T): T =
+    ArtifactCache.locked(new Path(dir).toString)(body)
 
   // ------------------- generation ledger + logical deletion (shared
   // by the band index and the unigram LM: any append-mode artifact

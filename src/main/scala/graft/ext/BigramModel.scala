@@ -177,28 +177,22 @@ object BigramModel {
                                bg: DataFrame, nBigrams: Long,
                                stream: DataFrame)
 
-  /** Session memo over the model-side prep (netted vocab, smoothing
-    * constant, mapped bigram table): the JM and KN scorers share one
-    * artifact and both re-netted both ledgers per call (~1 s of driver
-    * actions each). Keyed by artifact meta — the additive fingerprint
-    * bumps on append/remove, so a mutated model re-nets — and the
-    * application id. The corpus-dependent `stream` stays per-call.
-    * Stale entries for a mutated artifact are evicted and unpersisted
-    * by [[ServingMemo]].
+  /** The model-side prep (netted vocab, smoothing constant, mapped
+    * bigram table), cached: the JM and KN scorers share one artifact
+    * and both re-netted both ledgers per call (~1 s of driver actions
+    * each). Versioned by the artifact meta, whose additive fingerprint
+    * bumps on append/remove. The corpus-dependent `stream` stays
+    * per-call.
     */
-  private val prepMemo = scala.collection.concurrent.TrieMap
-    .empty[String, ServingMemo.Entry[(DataFrame, Long, Long, DataFrame, Long)]]
-
   private def prepCached(spark: SparkSession, dir: String,
                          vocabSize: Int): (DataFrame, Long, Long, DataFrame, Long) =
-    ServingMemo.cached(prepMemo,
-      s"${spark.sparkContext.applicationId}#$dir#$vocabSize",
+    ArtifactCache.get(spark.sparkContext, s"bigram-prep#$dir#$vocabSize",
       Artifact.readMeta(spark, dir).getOrElse("")) {
       val p = modelPrep(spark, dir, vocabSize)
-      ServingMemo.Entry(p, Seq(p._1, p._4))
+      ArtifactCache.Entry(p, Seq(p._1, p._4))
     }
 
-  /** Pre-net the model side into the session memo — warm-phase hook so
+  /** Pre-net the model side into the cache — warm-phase hook so
     * the first scorer (JM or KN) measures serve cost, not the one-time
     * two-ledger netting (the [[LanguageModel.warmVocab]] discipline).
     */

@@ -113,12 +113,6 @@ object Bpe {
     (merges.result(), state)
   }
 
-  /** Session-scoped memo: queries share one training run per fixture
-    * dir (three queries would otherwise re-train identically).
-    */
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[String, (Seq[Merge], DataFrame)]
-
   /** Trained tokenizer, persisted as a fingerprint-guarded artifact
     * (r18 optimization): the merge list + final vocabulary
     * segmentation are written once per corpus content and re-served
@@ -129,13 +123,13 @@ object Bpe {
     * does a FULL retrain on any corpus or parameter change, which is
     * exactly "tokenizers are retrained, not patched" made persistent:
     * a shipped tokenizer is an artifact, not a per-session scratch
-    * value. Within a session the loaded result is memoized as before
-    * (the application id scopes entries to the live SparkContext).
+    * value. The loaded result is cached per (app, key), versioned by
+    * the corpus listing, so queries share one load.
     */
   def trained(spark: SparkSession, docs: DataFrame, key: String,
               nMerges: Int = 8): (Seq[Merge], DataFrame) =
-    memo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}#$key#$nMerges", {
+    ArtifactCache.get(spark.sparkContext, s"bpe#$key#$nMerges",
+        Artifact.inputListing(docs).getOrElse("")) {
         val dir = s"${Artifact.root(key)}/bpe_m$nMerges"
         Artifact.ensure(spark, dir,
           s"bpe v1 m=$nMerges fp=" +
@@ -149,8 +143,8 @@ object Bpe {
           .orderBy(col("merge_rank")).collect()
           .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2),
             r.getLong(3))).toSeq
-        (m, spark.read.parquet(s"$dir/state"))
-      })
+        ArtifactCache.Entry((m, spark.read.parquet(s"$dir/state")))
+      }
 
   /** The learned merge table as a DataFrame (merge_rank, lhs, rhs,
     * pair_n) — rank order IS the application order.

@@ -174,16 +174,7 @@ object Classifier {
     * distribution sums to exactly 1, so scores are comparable across
     * labels. The scored frame may be any batch, not just the seed.
     */
-  /** Session memo over the netted model tables (the LM/bigram serving
-    * discipline): scores+predict re-netted both ledgers per call.
-    * Keyed by artifact meta (append/remove bump the additive
-    * fingerprint) and application id. Stale entries for a mutated
-    * artifact are evicted and unpersisted by [[ServingMemo]].
-    */
-  private val prepMemo = scala.collection.concurrent.TrieMap
-    .empty[String, ServingMemo.Entry[(DataFrame, Long, DataFrame)]]
-
-  /** Pre-net the serving tables into the session memo — warm-phase
+  /** Pre-net the serving tables into the cache — warm-phase
     * hook so the first scorer measures serve cost, not the one-time
     * ledger netting (the [[LanguageModel.warmVocab]] discipline).
     */
@@ -192,8 +183,9 @@ object Classifier {
 
   private def servingPrep(spark: SparkSession, dir: String,
                           vocabSize: Int): (DataFrame, Long, DataFrame) =
-    ServingMemo.cached(prepMemo,
-      s"${spark.sparkContext.applicationId}#$dir#$vocabSize",
+    // scores+predict re-netted both ledgers per call; versioned by the
+    // artifact meta (append/remove bump the additive fingerprint)
+    ArtifactCache.get(spark.sparkContext, s"nb-prep#$dir#$vocabSize",
       Artifact.readMeta(spark, dir).getOrElse("")) {
       Artifact.requireKind(spark, dir, MetaPrefix)
       // net the ledgers once; every derived table below reads these
@@ -220,7 +212,7 @@ object Classifier {
       // the derived serving tables are materialized — the intermediate
       // checkpoints would otherwise stay cached for the session
       Seq(counts, priors, v).foreach(_.unpersist())
-      ServingMemo.Entry((inVocab, vSize, labelStats), Seq(inVocab, labelStats))
+      ArtifactCache.Entry((inVocab, vSize, labelStats), Seq(inVocab, labelStats))
     }
 
   def score(spark: SparkSession, docs: DataFrame, dir: String,

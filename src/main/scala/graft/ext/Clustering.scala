@@ -102,21 +102,19 @@ object Clustering {
     assigned
   }
 
-  /** Session-scoped memo over [[kmeans]]: the three cluster_* queries
-    * share one fit instead of re-running the seed/update collects and
-    * per-iteration scans identically; the final assignment is
-    * checkpointed so downstream reads are one local scan. Keyed by the
-    * application id so a later session retrains rather than inheriting
-    * state bound to a stopped context.
+  /** [[kmeans]], cached per (app, key) and versioned by the input
+    * listing: the three cluster_* queries share one fit instead of
+    * re-running the seed/update collects and per-iteration scans
+    * identically; the final assignment is checkpointed so downstream
+    * reads are one local scan.
     */
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   def fitted(spark: org.apache.spark.sql.SparkSession, emb: DataFrame,
              key: String, k: Int = 8, iters: Int = 2): DataFrame =
-    memo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}#$key#$k#$iters",
-      kmeans(emb, k, iters).localCheckpoint())
+    ArtifactCache.get(spark.sparkContext, s"kmeans#$key#$k#$iters",
+        Artifact.inputListing(emb).getOrElse("")) {
+      val fit = kmeans(emb, k, iters).localCheckpoint()
+      ArtifactCache.Entry(fit, Seq(fit))
+    }
 
   /** Per-cluster size and inertia (Σ d², each d² snapped to the 6-dp
     * decimal grid before the exact sum — the dsum contract).

@@ -192,29 +192,23 @@ object LanguageModel {
     * training corpus: scoring new data against a frozen corpus model is
     * the production serving shape.
     */
-  /** Session memo over the pinned serving vocab: every scoring call
-    * (perplexity queries, DSIR's two models, the streaming quality
-    * gate's per-micro-batch scoring) re-netted the count ledger — 3-4
-    * driver actions per call over a bounded table that only changes
-    * when the MODEL changes. Keyed by the artifact meta (the additive
+  /** The pinned serving vocab, cached: every scoring call (perplexity
+    * queries, DSIR's two models, the streaming quality gate's
+    * per-micro-batch scoring) re-netted the count ledger — 3-4 driver
+    * actions per call over a bounded table that only changes when the
+    * MODEL changes. Versioned by the artifact meta, whose additive
     * fingerprint bumps on every append/remove, so a mutated model
-    * re-nets) and the application id (a later session retrains rather
-    * than serving state bound to a stopped context). Stale entries for
-    * a mutated artifact are evicted and unpersisted by [[ServingMemo]].
+    * re-nets.
     */
-  private val vocabMemo =
-    scala.collection.concurrent.TrieMap.empty[String, ServingMemo.Entry[DataFrame]]
-
   private def vocabCached(spark: SparkSession, dir: String,
                           vocabSize: Int): DataFrame =
-    ServingMemo.cached(vocabMemo,
-      s"${spark.sparkContext.applicationId}#$dir#$vocabSize",
+    ArtifactCache.get(spark.sparkContext, s"lm-vocab#$dir#$vocabSize",
       Artifact.readMeta(spark, dir).getOrElse("")) {
       val v = vocab(spark, dir, vocabSize).localCheckpoint()
-      ServingMemo.Entry(v, Seq(v))
+      ArtifactCache.Entry(v, Seq(v))
     }
 
-  /** Pre-net the serving vocab into the session memo — called from the
+  /** Pre-net the serving vocab into the cache — called from the
     * warm phase so the first scoring query against each model measures
     * serve cost, not the one-time ledger netting.
     */

@@ -216,7 +216,7 @@ object LrClassifier {
     * build + broadcast-join NLL fold, ~1.6 s at sf0.1) on EVERY serve
     * of every `classify_lr_*` query (r18 optimization: 4 redundant
     * teacher passes per bench run → 0; the raw-slice fingerprint also
-    * hits the [[Artifact.fingerprint]] session memo, which the
+    * hits the [[Artifact.fingerprint]] cache, which the
     * teacher-labeled plan could not — its pinned vocab is a
     * localCheckpoint leaf). The threshold joins the metadata line so a
     * changed teacher gate still retrains.

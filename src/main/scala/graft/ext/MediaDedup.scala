@@ -72,27 +72,18 @@ object MediaDedup {
   val ExactAssetOffset = 20000000L
   val NearAssetOffset = 30000000L
 
-  /** Session-memoized for deterministic file-backed corpora (the
-    * [[Artifact.fingerprint]] memo discipline): ~15 registered media
-    * queries each re-ran this max(doc_id) guard as an eager aggregate
-    * job over the same fixture frame inside their timed windows. A memo
-    * hit is provably the recompute outcome — the max is a deterministic
-    * function of the input files the key pins. Non-file-backed frames
-    * (tests, checkpoints) always recompute.
+  /** Cached for file-determined corpora ([[Artifact.cachedByInputFiles]]):
+    * ~15 registered media queries each re-ran this max(doc_id) guard as
+    * an eager aggregate job over the same fixture frame inside their
+    * timed windows.
     */
-  private val headroomMemo = scala.collection.concurrent.TrieMap.empty[String, Unit]
-  private def requireIdHeadroom(docs: DataFrame): Unit = {
-    def check(): Unit = {
+  private def requireIdHeadroom(docs: DataFrame): Unit =
+    Artifact.cachedByInputFiles(docs, "idHeadroom") {
       val mx = docs.agg(max(col("doc_id"))).head()
       require(mx.isNullAt(0) || mx.getLong(0) < ReRenderOffset,
         s"plant-id offset $ReRenderOffset must exceed max doc_id " +
           s"${mx.getLong(0)} — raise the offsets for this corpus")
     }
-    Artifact.deterministicMemoKey(docs, "idHeadroom") match {
-      case Some(key) => headroomMemo.getOrElseUpdate(key, check())
-      case None => check()
-    }
-  }
 
   /** Tonight's image arrivals: a re-render of every `everyNth`-th
     * corpus image with the first row's first `ceil(w/9)` pixels

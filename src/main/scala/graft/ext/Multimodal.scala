@@ -393,12 +393,6 @@ object Multimodal {
           col("video_tokens")).as("n_tokens"))
   }
 
-  // staged media-fixture memo: one write per (app, fixture dir); the
-  // binary-source query measures the SCAN, the staging is a fixture
-  // build charged to the warm phase like other artifacts
-  private val mediaFilesMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Stage the media spool the STREAMED ingest gate reads: the per-doc
     * payloads as a `(doc_id, media)` parquet directory — the
     * landing-zone shape a real pipeline streams (small media files
@@ -425,38 +419,41 @@ object Multimodal {
   }
 
   def ensureMediaGateSpool(s: SparkSession, d: String): String =
-    mediaFilesMemo.synchronized {
-      val key = s"${s.sparkContext.applicationId}#gate#$d"
-      mediaFilesMemo.getOrElseUpdate(key, {
-        val dir = s"/root/repo/target/binary_gate_${fixtureDirName(d)}"
-        graft.Fs.deleteTree(dir)
-        withFakeMedia(graft.Tables.documents(s, d))
-          .select(col("doc_id"),
-            when(pmod(col("doc_id"), lit(97)) === 0,
-              expr("substring(media, 1, length(media) - 1)"))
-              .otherwise(col("media")).as("media"))
-          .repartition(8)
-          .write.mode("overwrite").parquet(dir)
-        dir
-      })
+    stagedOnce(s, d, "binary_gate") { (docs, dir) =>
+      withFakeMedia(docs)
+        .select(col("doc_id"),
+          when(pmod(col("doc_id"), lit(97)) === 0,
+            expr("substring(media, 1, length(media) - 1)"))
+            .otherwise(col("media")).as("media"))
+        .repartition(8)
+        .write.mode("overwrite").parquet(dir)
     }
 
   /** Stage the per-doc media files once per (app, fixture) and return
     * the directory — [[graft.sources.SourceQueries]]' binary-file scan
-    * reads it. The whole block is synchronized: the thunk has side
-    * effects on a shared fixed directory (delete + re-write), and two
-    * racing callers would interleave file writes.
+    * reads it.
     */
   def ensureMediaFiles(s: SparkSession, d: String): String =
-    mediaFilesMemo.synchronized {
-      val key = s"${s.sparkContext.applicationId}#$d"
-      mediaFilesMemo.getOrElseUpdate(key, {
-        val dir = s"/root/repo/target/binary_src_${fixtureDirName(d)}"
-        graft.Fs.deleteTree(dir) // stale payloads from an older formula
-        writeMediaFiles(withFakeMedia(graft.Tables.documents(s, d)), dir)
-        dir
-      })
+    stagedOnce(s, d, "binary_src") { (docs, dir) =>
+      writeMediaFiles(withFakeMedia(docs), dir)
     }
+
+  // One staging write per (app, fixture dir, corpus listing): the
+  // binary-source queries measure the SCAN, the staging is a fixture
+  // build charged to the warm phase like other artifacts. The write
+  // deletes and re-creates a shared fixed directory, so it runs under
+  // the cache's per-name lock.
+  private def stagedOnce(s: SparkSession, d: String, kind: String)(
+      write: (DataFrame, String) => Unit): String = {
+    val docs = graft.Tables.documents(s, d)
+    ArtifactCache.get(s.sparkContext, s"$kind#$d",
+        Artifact.inputListing(docs).getOrElse("")) {
+      val dir = s"target/${kind}_${fixtureDirName(d)}"
+      graft.Fs.deleteTree(dir) // stale payloads from an older formula
+      write(docs, dir)
+      ArtifactCache.Entry(dir)
+    }
+  }
 
   /** Materialize each row's media payload as an individual `<doc_id>.bin`
     * file — the on-disk shape a binary ingestion source reads.

@@ -22,30 +22,27 @@ object Pca {
 
   val Dims = 64
 
-  // covariance+eigen+means memo per (app, caller key): the three pca_*
-  // queries share one moment pass instead of re-scanning the corpus
-  // (same app-scoped memo discipline as Clustering.fitted)
+  // covariance+eigen+means, cached per (app, caller key) and versioned
+  // by the input listing: the three pca_* queries share one moment pass
+  // instead of re-scanning the corpus
   private case class Model(cov: Array[Array[Double]],
     eigvals: Array[Double], eigvecs: Array[Array[Double]],
     means: Array[Double])
 
-  private val memo = scala.collection.concurrent.TrieMap.empty[String, Model]
-
   // One means pass feeds BOTH the covariance centering and Model.means
-  // (2 corpus scans per model instead of 3). Memo staleness caveat:
-  // the applicationId#key memo never invalidates within one app — if
-  // the fixture dir is rewritten mid-app, use a fresh key.
+  // (2 corpus scans per model instead of 3).
   private def modelFor(spark: SparkSession, emb: DataFrame, key: String): Model =
-    memo.getOrElseUpdate(s"${spark.sparkContext.applicationId}#$key", {
+    ArtifactCache.get(spark.sparkContext, s"pca#$key",
+        Artifact.inputListing(emb).getOrElse("")) {
       val (pU, sxU, n) = momentsPass(emb)
       val cov = Array.ofDim[Double](Dims, Dims)
       cellsFromMoments(pU, sxU, n).foreach { case (i, j, c) =>
         cov(i)(j) = c; cov(j)(i) = c
       }
       val (vals, vecs) = jacobiEigen(cov)
-      Model(cov, vals, vecs,
-        Array.tabulate(Dims)(i => sxU(i).toDouble / 1e6 / n))
-    })
+      ArtifactCache.Entry(Model(cov, vals, vecs,
+        Array.tabulate(Dims)(i => sxU(i).toDouble / 1e6 / n)))
+    }
 
   /** Exact first+second moments in ONE treeAggregate scan: per-element
     * micro-units xu = round₆(x)·10⁶ (replicating Spark's

@@ -169,18 +169,12 @@ object Release {
       md5(col("text")).as("text_md5"))
   }
 
-  // Release-chain serving memo: the text chain is one deterministic
-  // corpus pass now consumed by TWO registered queries (corpus_release
-  // and corpus_release_mm) — computed once per (app, corpus
-  // fingerprint) under the ServingMemo discipline, so the suite pays
-  // the regex front-end + gates + dedup + decon once, not per
-  // consumer. A mutated corpus re-nets via the fingerprint key.
-  private val releaseMemo = scala.collection.concurrent.TrieMap
-    .empty[String, ServingMemo.Entry[DataFrame]]
-
-  /** [[release]] with default parameters, memoized per (app, corpus
-    * fingerprint); the returned frame is localCheckpointed (pinned by
-    * the memo entry).
+  /** [[release]] with default parameters, cached per (app, corpus
+    * fingerprint): the text chain is one deterministic corpus pass
+    * consumed by TWO registered queries (corpus_release and
+    * corpus_release_mm), so the suite pays the regex front-end + gates
+    * + dedup + decon once, not per consumer. The returned frame is
+    * localCheckpointed (pinned by the cache entry).
     */
   def releaseCached(spark: SparkSession, docs: DataFrame): DataFrame = {
     // the fingerprint covers EVERY input column the chain reads:
@@ -191,8 +185,7 @@ object Release {
     // released corpus across sessions, not just within one app
     val fp = Artifact.fingerprint(docs,
       col("doc_id"), col("text"), col("lang"), col("source"))
-    ServingMemo.cached(releaseMemo,
-      s"${spark.sparkContext.applicationId}#release", fp.toString) {
+    ArtifactCache.get(spark.sparkContext, "release", fp) {
       // the chain is deterministic per corpus fingerprint, so its
       // result PERSISTS across apps (keyed on the fingerprint — the
       // path needs no fixture dir): a warm fixture reads the released
@@ -212,14 +205,14 @@ object Release {
       val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(done) && !Artifact.hasPendingMutation(spark, dir)) {
         val rel = spark.read.parquet(s"$dir/rel")
-        ServingMemo.Entry(rel, Seq.empty)
+        ArtifactCache.Entry(rel)
       } else {
         val rel = release(docs).localCheckpoint()
         Artifact.beginMutation(spark, dir)
         rel.write.mode("overwrite").parquet(s"$dir/rel")
         fs.create(done, true).close()
         Artifact.endMutation(spark, dir)
-        ServingMemo.Entry(rel, Seq(rel))
+        ArtifactCache.Entry(rel, Seq(rel))
       }
     }
   }

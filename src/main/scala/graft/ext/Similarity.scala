@@ -245,23 +245,15 @@ object Similarity {
     * rerank so the two can never drift apart. Same driver-artifact
     * contract as the PQ lookup tables.
     */
-  /** Session-memoized for deterministic file-backed frames (the
-    * [[Artifact.fingerprint]] memo discipline): four index searchers
-    * plus the recall report each re-collected the SAME bounded query
-    * set per serve — one eager driver job each. The key pins the plan
-    * and the input files, so a hit is provably the recollect; test/
-    * in-memory frames always recompute.
+  /** Cached for file-determined frames ([[Artifact.cachedByInputFiles]]):
+    * four index searchers plus the recall report each re-collected the
+    * SAME bounded query set per serve — one eager driver job each.
     */
-  private val queryMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Array[(Long, Array[Float])]]
   private[ext] def collectQueries(emb: DataFrame, nQueries: Int): Array[(Long, Array[Float])] = {
     val bounded = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id"), col("embedding"))
-    def compute(): Array[(Long, Array[Float])] =
+    Artifact.cachedByInputFiles(bounded, s"queries:$nQueries") {
       bounded.collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    Artifact.deterministicMemoKey(bounded, s"queries:$nQueries") match {
-      case Some(key) => queryMemo.getOrElseUpdate(key, compute())
-      case None => compute()
     }
   }
 

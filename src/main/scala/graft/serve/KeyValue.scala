@@ -1,6 +1,7 @@
 package graft.serve
 
 import graft.analytics.{Enrich, Kpis}
+import graft.ext.{Artifact, ArtifactCache}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -143,13 +144,8 @@ object KeyValue {
     * lineitem) — no data scanned, rebuild on any file change.
     */
   def ensureStore(spark: SparkSession, dir: String): String = {
-    import graft.ext.Artifact
-    val srcs = Seq(s"$dir/events.parquet", s"$dir/customer.parquet",
-      s"$dir/lineitem.parquet") ++
-      (if (hasDocs(spark, dir)) Seq(s"$dir/documents.parquet") else Nil)
-    val fp = Artifact.fileFingerprint(spark, srcs: _*)
-    val root = s"${Artifact.root(dir)}/serving"
-    Artifact.ensure(spark, root, s"serving v1 fp=$fp") {
+    val root = storeRoot(dir)
+    Artifact.ensure(spark, root, s"serving v1 fp=${storeSourcesFingerprint(spark, dir)}") {
       servingTable(spark, dir)
         .repartitionByRange(4, col("pk"), col("sk"))
         .sortWithinPartitions(col("pk"), col("sk"))
@@ -157,6 +153,13 @@ object KeyValue {
     }
     s"$root/store"
   }
+
+  private def storeRoot(dir: String): String = s"${Artifact.root(dir)}/serving"
+
+  private def storeSourcesFingerprint(spark: SparkSession, dir: String): String =
+    Artifact.fileFingerprint(spark, (Seq(s"$dir/events.parquet",
+      s"$dir/customer.parquet", s"$dir/lineitem.parquet") ++
+      (if (hasDocs(spark, dir)) Seq(s"$dir/documents.parquet") else Nil)): _*)
 
   // ------------------- incremental (day-partitioned) serving store
 
@@ -236,8 +239,26 @@ object KeyValue {
     * marker; a crash mid-refresh forces a full rebuild.
     */
   def ensureStoreDaily(spark: SparkSession, dir: String): String = {
-    import graft.ext.Artifact
-    val root = s"${Artifact.root(dir)}/serving_daily"
+    val root = dailyRoot(dir)
+    // one refresher per store: a lookup that misses during a streamed
+    // refresh waits here, then takes the fast path below
+    Artifact.withDirLock(root)(refreshDaily(spark, dir, root))
+  }
+
+  private def dailyRoot(dir: String): String = s"${Artifact.root(dir)}/serving_daily"
+
+  /** First line of a small text file, `None` when it does not exist. */
+  private def readLine(spark: SparkSession, path: String): Option[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val in = new java.io.BufferedReader(new java.io.InputStreamReader(fs.open(p)))
+      try Option(in.readLine()).map(_.trim) finally in.close()
+    }
+  }
+
+  private def refreshDaily(spark: SparkSession, dir: String, root: String): String = {
     val storePath = s"$root/store"
     // v2: the day fingerprint grew the corpus columns (media items) —
     // the version bump rebuilds any v1 store instead of misreading its
@@ -256,13 +277,6 @@ object KeyValue {
     val srcFp = Artifact.fileFingerprint(spark,
       (Seq(s"$dir/events.parquet", s"$dir/lineitem.parquet") ++
         (if (hasDocs(spark, dir)) Seq(s"$dir/documents.parquet") else Nil)): _*)
-    def readSrcFp: Option[String] =
-      if (!srcFs.exists(srcFpPath)) None
-      else {
-        val in = new java.io.BufferedReader(
-          new java.io.InputStreamReader(srcFs.open(srcFpPath)))
-        try Option(in.readLine()).map(_.trim) finally in.close()
-      }
     def writeSrcFp(): Unit = {
       val out = srcFs.create(srcFpPath, true)
       try out.write(srcFp.getBytes("UTF-8")) finally out.close()
@@ -276,7 +290,7 @@ object KeyValue {
     // (whose full-rebuild branch recreates them).
     if (!Artifact.hasPendingMutation(spark, root) &&
         Artifact.readMeta(spark, root).contains(metaLine) &&
-        readSrcFp.contains(srcFp) &&
+        readLine(spark, srcFpPath.toString).contains(srcFp) &&
         srcFs.exists(new org.apache.hadoop.fs.Path(storePath)) &&
         srcFs.exists(new org.apache.hadoop.fs.Path(s"$root/daymeta")))
       return storePath
@@ -364,54 +378,49 @@ object KeyValue {
     * [[servingTableCached]]: the freshness check (two narrow per-day
     * fingerprint scans) and the partition-directory listing run once,
     * not per query — the day layout means MANY directories, and
-    * re-listing them per lookup would dominate serve cost.
+    * re-listing them per lookup would dominate serve cost. The cache
+    * version is the store's committed source fingerprint (`srcmeta`,
+    * written last by every refresh): lookups during a streamed refresh
+    * keep the committed pre-refresh frame, and the first lookup after
+    * the commit reloads.
     */
-  def dailyStoreCached(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, s"daily:$dir") {
-      val df = loadDailyStore(spark, dir)
+  def dailyStoreCached(spark: SparkSession, dir: String): DataFrame = {
+    val srcmeta = s"${dailyRoot(dir)}/srcmeta"
+    val committed = readLine(spark, srcmeta).getOrElse {
+      ensureStoreDaily(spark, dir)
+      readLine(spark, srcmeta).getOrElse("")
+    }
+    persisted(spark, s"daily-store#$dir", committed, dailyRoot(dir))(
+      loadDailyStore(spark, dir))
+  }
+
+  /** Load a store into memory under its directory lock, so no refresh
+    * rewrites files between the listing and the materialization. The
+    * cached frame is detached from the files: Spark drops and lazily
+    * rebuilds the cached data of any frame that reads a path once a
+    * write lands in it, which would send lookups holding the committed
+    * frame back to files a refresh is replacing.
+    */
+  private def persisted(spark: SparkSession, name: String, version: String,
+                        root: String)(load: => DataFrame): DataFrame =
+    ArtifactCache.get(spark, name, version)(Artifact.withDirLock(root) {
+      val files = load
+      val df = spark.createDataFrame(files.rdd, files.schema)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }
-
-  /** Drop the session's load-once store materializations for `dir` —
-    * the streaming refresh path ([[graft.stream.ServingIngest]]) calls
-    * this after mutating the fact table so the NEXT lookup reloads the
-    * refreshed store instead of serving the pinned pre-mutation plan.
-    */
-  private[graft] def invalidate(spark: SparkSession, dir: String): Unit = {
-    val perSession = cache.synchronized { cache.get(spark) }
-    if (perSession != null)
-      Seq(dir, s"daily:$dir").foreach { k =>
-        val df = perSession.remove(k)
-        if (df != null) df.unpersist()
-      }
-  }
-
-  // Weak keys: entries die with their SparkSession (no identity-hash
-  // collisions, no pinning of plans for stopped sessions).
-  private val cache =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
-
-  private def cached(spark: SparkSession, key: String)(load: => DataFrame): DataFrame = {
-    val perSession = cache.synchronized {
-      cache.computeIfAbsent(spark,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-    }
-    perSession.computeIfAbsent(key, _ => load)
-  }
+      // materialize eagerly — this is the "load" step; a failed load
+      // must not stay registered as cached data
+      try df.count() catch { case e: Throwable => df.unpersist(); throw e }
+      ArtifactCache.Entry(df, Seq(df))
+    })
 
   /** In-session view of the persisted store ([[ensureStore]]): read from
     * the sorted parquet and memory-persisted, so the lookup families
     * scan a loaded store instead of re-running enrich+aggregate per
     * query — and a fresh session pays only the fingerprint check + load,
-    * not the build.
+    * not the build. Versioned by the source file fingerprint, so a
+    * lookup after a source change rebuilds and reloads.
     */
   def servingTableCached(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir) {
-      val df = spark.read.parquet(ensureStore(spark, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count() // materialize eagerly — this is the "load" step
-      df
-    }
+    persisted(spark, s"store#$dir", storeSourcesFingerprint(spark, dir), storeRoot(dir))(
+      spark.read.parquet(ensureStore(spark, dir)))
 }

@@ -82,7 +82,7 @@ object SourceQueries {
     // the aggregate must equal the oracle's byte accounting over the
     // documents the fake media derives from.
     "s7_binary_source" -> ((s, d) => {
-      // fixture staging is memoized per (app, dir) and charged to the
+      // fixture staging is cached per (app, dir) and charged to the
       // warm phase — the query measures the binaryFile SCAN, not a
       // 5000-file re-write per invocation
       val tmp = graft.ext.Multimodal.ensureMediaFiles(s, d)

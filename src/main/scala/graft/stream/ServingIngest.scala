@@ -74,9 +74,12 @@ object ServingIngest {
 
   /** Any [[SourceConfig]] of raw event rows → per-micro-batch: append
     * to the fact table, then refresh the day-partitioned serving store
-    * (changed days only) and drop the session's load-once store caches
-    * so the next lookup serves the refreshed data. `onBatch` receives
-    * (batchId, store path) after each refresh.
+    * (changed days only). The refresh holds the store's directory lock
+    * and commits its source fingerprint last — the version under which
+    * [[graft.serve.KeyValue.dailyStoreCached]] caches the loaded store —
+    * so lookups during the refresh serve the committed pre-refresh
+    * store and the first lookup after the commit reloads. `onBatch`
+    * receives (batchId, store path) after each refresh.
     */
   def start(spark: SparkSession, source: SourceConfig, checkpointDir: String,
             dir: String,
@@ -88,7 +91,6 @@ object ServingIngest {
       .foreachBatch { (batch: DataFrame, id: Long) =>
         if (!batch.isEmpty) {
           appendEvents(spark, dir, batch, id)
-          KeyValue.invalidate(spark, dir)
           val store = KeyValue.ensureStoreDaily(spark, dir)
           onBatch(id, store)
         }

@@ -1,6 +1,7 @@
 package graft.stream
 
 import graft.Tables
+import graft.ext.{Artifact, ArtifactCache}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -29,13 +30,6 @@ object StreamQueries {
       new Thread(() => graft.Fs.deleteTree(p.toString)))
     p.toString
   }
-
-  // tuned-session cache: one clone per (parent session, partition
-  // count). Clones share the SparkContext and differ only in
-  // spark.sql.shuffle.partitions; reusing them keeps the per-app
-  // session count bounded.
-  private val tunedSessions =
-    scala.collection.concurrent.TrieMap.empty[(Int, Int), SparkSession]
 
   private def bytesUnder(s: SparkSession, path: String): Long =
     try {
@@ -73,35 +67,30 @@ object StreamQueries {
     val p = math.min(configured.toLong,
       math.max(1L, (bytes + advisory - 1) / advisory)).toInt
     if (p >= configured) s
-    else tunedSessions.getOrElseUpdate((System.identityHashCode(s), p), {
-      val c = s.newSession()
+    // one clone per (parent, p), cached under the parent: clones carry
+    // the parent's runtime confs and differ only in
+    // spark.sql.shuffle.partitions, and reuse bounds the session count
+    else ArtifactCache.get(s, s"stream-session#$p", "") {
+      val c = org.apache.spark.sql.graftbridge.bridge.cloneSession(s)
       c.conf.set("spark.sql.shuffle.partitions", p.toString)
-      c
-    })
+      ArtifactCache.Entry(c)
+    }
   }
-
-  // decontamination-sketch memo: the adaptively-sized benchmark Bloom,
-  // keyed on (app, fixture, w) + the benchmark slice's content
-  // fingerprint — a mutated fixture re-sizes and re-builds; an
-  // unchanged one pays only the fingerprint scan per serve. No pinned
-  // frames (the value is driver-side bytes).
-  private val deconMemo = scala.collection.concurrent.TrieMap
-    .empty[String, graft.ext.ServingMemo.Entry[Array[Byte]]]
 
   /** The ingest-gate's benchmark sketch, built once per (benchmark
     * fingerprint, w): sizing measured from the benchmark's shingle
     * cardinality (see [[graft.ext.Dedup.adaptiveBenchmarkSketch]]).
-    * Warm primes this memo so the gate's timed window measures only the
-    * streamed probe, per the house cold-builds-to-build_sec rule.
+    * Versioned by the benchmark slice's content fingerprint, so a
+    * mutated fixture re-sizes and re-builds. Warm primes the cache so
+    * the gate's timed window measures only the streamed probe, per the
+    * house cold-builds-to-build_sec rule.
     */
   private[graft] def deconSketch(s: SparkSession, d: String, w: Int = 5): Array[Byte] = {
     val bench = Tables.documents(s, d)
       .filter(pmod(col("doc_id"), lit(10)) === 0)
-    val fp = graft.ext.Artifact.fingerprint(bench, col("doc_id"), col("text"))
-    graft.ext.ServingMemo.cached(deconMemo,
-      s"${s.sparkContext.applicationId}#$d#w=$w", fp) {
-      graft.ext.ServingMemo.Entry(
-        graft.ext.Dedup.adaptiveBenchmarkSketch(bench, w), Nil)
+    val fp = Artifact.fingerprint(bench, col("doc_id"), col("text"))
+    ArtifactCache.get(s.sparkContext, s"decon#$d#w=$w", fp) {
+      ArtifactCache.Entry(graft.ext.Dedup.adaptiveBenchmarkSketch(bench, w))
     }
   }
 
@@ -110,24 +99,6 @@ object StreamQueries {
       org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("text",
       org.apache.spark.sql.types.StringType)))
-
-  // curated-lifecycle memo: (root, spool, lmDir, wire schema) per
-  // (app, fixture dir) — the Pca-memo staleness caveat applies (a
-  // fixture dir rewritten mid-app needs a fresh session)
-  private val curatedMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (String, String, String, org.apache.spark.sql.types.StructType)]
-
-  // One lock per memo key: TrieMap.getOrElseUpdate can evaluate its
-  // thunk concurrently, and this thunk has side effects (it deletes and
-  // re-streams the shared non-temp root) — two racing callers would
-  // interleave seed/ingest writes and corrupt the corpus (r10 advice).
-  // putIfAbsent is atomic, so all callers of a key share one object.
-  private val curatedLocks =
-    scala.collection.concurrent.TrieMap.empty[String, AnyRef]
-  private def curatedLockFor(key: String): AnyRef = {
-    curatedLocks.putIfAbsent(key, new Object)
-    curatedLocks(key)
-  }
 
   /** A persisted lifecycle-done marker: the ingest lifecycles below are
     * DETERMINISTIC given the corpus (seed slice, spool content, and the
@@ -179,21 +150,9 @@ object StreamQueries {
     * rebuild.
     */
   def ensureCurated(s: SparkSession, d: String): (String, String, String,
-      org.apache.spark.sql.types.StructType) = {
-    val key = s"${s.sparkContext.applicationId}#$d"
-    curatedMemo.get(key) match {
-      case Some(v) => v
-      case None => curatedLockFor(key).synchronized {
-        ensureCuratedLocked(s, d, key)
-      }
-    }
-  }
-
-  // Runs under the per-key lock: at most one delete+seed+stream per key.
-  private def ensureCuratedLocked(s: SparkSession, d: String, key: String):
-      (String, String, String, org.apache.spark.sql.types.StructType) =
-    curatedMemo.getOrElseUpdate(key, {
-      import graft.ext.{Artifact, LanguageModel}
+      org.apache.spark.sql.types.StructType) =
+    lifecycleOnce(s, d, "curated") {
+      import graft.ext.LanguageModel
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val seed = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
       val batch = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
@@ -230,13 +189,16 @@ object StreamQueries {
         writeMarker(s, root, fp)
       }
       (root, spool, lmDir, wire.schema)
-    })
+    }
 
-  // streamed-media-ingest lifecycle memo: (root, spool, spool schema)
-  // per (app, fixture dir) — same locking discipline as the curated
-  // memo (the thunk deletes and re-streams a shared non-temp root)
-  private val mediaIngestMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (String, String, org.apache.spark.sql.types.StructType)]
+  // One lifecycle build per (app, fixture dir, corpus listing). The
+  // build deletes and re-streams a shared non-temp root, so it runs
+  // under the cache's per-name lock — two racing callers would
+  // interleave seed/ingest writes and corrupt the corpus (r10 advice).
+  private def lifecycleOnce[V](s: SparkSession, d: String, kind: String)(build: => V): V =
+    ArtifactCache.get(s.sparkContext, s"$kind#$d",
+        Artifact.inputListing(Tables.documents(s, d)).getOrElse(""))(
+      ArtifactCache.Entry(build))
 
   /** Build the streamed media-ingest lifecycle once per (app, fixture):
     * reset the root, seed the [[graft.ext.MediaFeatures]] store with
@@ -252,38 +214,31 @@ object StreamQueries {
     * touching payload bytes.
     */
   def ensureMediaIngest(s: SparkSession, d: String): (String, String,
-      org.apache.spark.sql.types.StructType) = {
-    val key = s"${s.sparkContext.applicationId}#$d#media"
-    mediaIngestMemo.get(key) match {
-      case Some(v) => v
-      case None => curatedLockFor(key).synchronized {
-        mediaIngestMemo.getOrElseUpdate(key, {
-          import graft.ext.{Artifact, MediaFeatures}
-          val docs = Tables.documents(s, d).select(col("doc_id"))
-          val root = s"${Artifact.root(d)}/stream_media"
-          val spool = s"${Artifact.root(d)}/stream_media_spool"
-          val arrivals = MediaIngest.fixtureArrivals(s, docs)
-          val fp = s"media ${Artifact.fingerprint(docs, col("doc_id"))}"
-          if (!markerContent(s, root).contains(fp) ||
-              Artifact.hasPendingMutation(s, root) || !dirExists(s, spool)) {
-            val rootPath = new org.apache.hadoop.fs.Path(root)
-            rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-              .delete(rootPath, true)
-            MediaFeatures.ensure(s,
-              docs.filter(pmod(col("doc_id"), lit(10)) =!= 0), root)
-            arrivals.write.mode("overwrite").parquet(spool)
-            val ss = streamSession(s, spool, root)
-            val ckpt = scratchDir("graft-media-ingest-ckpt")
-            val q = MediaIngest.start(ss,
-              FileSourceConfig(spool, "parquet", arrivals.schema), ckpt, root)
-            q.awaitTermination()
-            writeMarker(s, root, fp)
-          }
-          (root, spool, arrivals.schema)
-        })
+      org.apache.spark.sql.types.StructType) =
+    lifecycleOnce(s, d, "media-ingest") {
+      import graft.ext.MediaFeatures
+      val docs = Tables.documents(s, d).select(col("doc_id"))
+      val root = s"${Artifact.root(d)}/stream_media"
+      val spool = s"${Artifact.root(d)}/stream_media_spool"
+      val arrivals = MediaIngest.fixtureArrivals(s, docs)
+      val fp = s"media ${Artifact.fingerprint(docs, col("doc_id"))}"
+      if (!markerContent(s, root).contains(fp) ||
+          Artifact.hasPendingMutation(s, root) || !dirExists(s, spool)) {
+        val rootPath = new org.apache.hadoop.fs.Path(root)
+        rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+          .delete(rootPath, true)
+        MediaFeatures.ensure(s,
+          docs.filter(pmod(col("doc_id"), lit(10)) =!= 0), root)
+        arrivals.write.mode("overwrite").parquet(spool)
+        val ss = streamSession(s, spool, root)
+        val ckpt = scratchDir("graft-media-ingest-ckpt")
+        val q = MediaIngest.start(ss,
+          FileSourceConfig(spool, "parquet", arrivals.schema), ckpt, root)
+        q.awaitTermination()
+        writeMarker(s, root, fp)
       }
+      (root, spool, arrivals.schema)
     }
-  }
 
   /** Fixture events as a stream, through the [[StreamSources]] seam (a
     * file config here; a Kafka config on a cluster with the connector).
@@ -291,16 +246,19 @@ object StreamQueries {
     * normalized inside the stream like the batch path does; the
     * pathGlobFilter is the S6-style name predicate.
     */
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), org.apache.spark.sql.types.StructType]
+  // Parquet footer schema, read once per (file, mtime): a fixture
+  // regenerated within one application re-reads instead of serving a
+  // stale schema.
+  private def rawSchema(s: SparkSession, path: String): org.apache.spark.sql.types.StructType =
+    ArtifactCache.get(s.sparkContext, s"schema#$path",
+        new java.io.File(path).lastModified.toString) {
+      ArtifactCache.Entry(s.read.parquet(path).schema)
+    }
 
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    // footer read once per fixture dir (stream_dedup_counts opens two
-    // source instances of the same path); keyed by (dir, mtime) so a
-    // fixture regenerated within one JVM doesn't serve a stale schema
+    // stream_dedup_counts opens two source instances of the same path
     val src = new java.io.File(s"$d/events.parquet")
-    val rawSchema = schemaCache.getOrElseUpdate((d, src.lastModified),
-      s.read.parquet(s"$d/events.parquet").schema)
+    val schema = rawSchema(s, src.getPath)
     // layout seam: the driver fixture ships events.parquet as a single
     // FILE in the table dir (the S6 name-predicate shape — glob-filter
     // the directory), but a written table (ScaleUp's scale fixtures,
@@ -309,9 +267,9 @@ object StreamQueries {
     // rows — stream the directory itself there
     val cfg =
       if (src.isDirectory)
-        FileSourceConfig(s"$d/events.parquet", "parquet", rawSchema)
+        FileSourceConfig(s"$d/events.parquet", "parquet", schema)
       else
-        FileSourceConfig(d, "parquet", rawSchema,
+        FileSourceConfig(d, "parquet", schema,
           Map("pathGlobFilter" -> "events.parquet"))
     Tables.normalizeEvents(StreamSources.open(s, cfg))
   }
@@ -322,13 +280,12 @@ object StreamQueries {
     */
   private def documentsStream(s: SparkSession, d: String): DataFrame = {
     val src = new java.io.File(s"$d/documents.parquet")
-    val rawSchema = schemaCache.getOrElseUpdate((s"$d/documents.parquet", src.lastModified),
-      s.read.parquet(s"$d/documents.parquet").schema)
+    val schema = rawSchema(s, src.getPath)
     val cfg =
       if (src.isDirectory)
-        FileSourceConfig(s"$d/documents.parquet", "parquet", rawSchema)
+        FileSourceConfig(s"$d/documents.parquet", "parquet", schema)
       else
-        FileSourceConfig(d, "parquet", rawSchema,
+        FileSourceConfig(d, "parquet", schema,
           Map("pathGlobFilter" -> "documents.parquet"))
     StreamSources.open(s, cfg)
   }
@@ -847,8 +804,8 @@ object StreamQueries {
     // decontamination answer (same oracle as `decontaminate_bloom`).
     "stream_decon_corpus" -> ((s0, d) => {
       // The sketch is a static batch-side ARTIFACT — built once per
-      // (benchmark fingerprint, w) via the session memo (the LM/NB
-      // serving-memo discipline) and served to every invocation; its
+      // (benchmark fingerprint, w) in the cache and served to every
+      // invocation; its
       // cardinality-measurement pass + Bloom build are a cold build
       // cost, charged to Warm/build_sec, not to the timed gate.
       val sk = deconSketch(s0, d)

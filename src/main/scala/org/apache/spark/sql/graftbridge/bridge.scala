@@ -23,6 +23,12 @@ object bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A child session that starts from the parent's runtime confs,
+    * temp views and functions (`newSession` starts from defaults).
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
   /** The analyzed plan of a DataFrame (to build new plan nodes on top). */
   def analyzed(df: DataFrame): LogicalPlan =
     df.queryExecution.analyzed

@@ -44,6 +44,24 @@ class FingerprintMemoSpec extends SparkSuite {
     assert(a != d)
   }
 
+  test("sessions of one SparkContext share the fingerprint cache") {
+    val cols = Seq(col("doc_id"), col("text"))
+    val slice = (s: org.apache.spark.sql.SparkSession) =>
+      Tables.documents(s, sfDir).filter(pmod(col("doc_id"), lit(7L)) === 0L)
+    // frames are built first: reading a file in a new session infers
+    // its schema with a job of its own
+    val mine = slice(spark)
+    val theirs = slice(spark.newSession())
+    val a = Artifact.fingerprint(mine, cols: _*)
+    val group = s"fpmemo-${System.nanoTime()}"
+    spark.sparkContext.setJobGroup(group, "second-session fingerprint")
+    val b = try Artifact.fingerprint(theirs, cols: _*)
+      finally spark.sparkContext.clearJobGroup()
+    assert(a == b)
+    assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
+      "the second session must hit the first session's entry, not rescan")
+  }
+
   test("a rewritten input file can never serve a stale fingerprint") {
     val dir = s"target/test_fpmemo_${System.nanoTime()}"
     Seq((1L, "one"), (2L, "two")).toDF("doc_id", "text")

@@ -8,6 +8,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 object ServingIngestSpec {
   /** Raw event row in the fixture table's on-disk shape (µs ts). */
@@ -63,7 +64,7 @@ class ServingIngestSpec extends SparkSuite {
     val store = KeyValue.ensureStoreDaily(spark, fix)
     val before = dayDirs(store)
     assert(before.nonEmpty)
-    // prime the load-once cache so the test proves invalidation too
+    // prime the load-once cache so the test proves the post-refresh reload too
     val primedL1 = KeyValue.dailyStoreCached(spark, fix)
       .filter(col("pk").contains("DATE#2024-02-01")).count()
     assert(primedL1 == 0L, "the new day must not exist before the increment")
@@ -116,7 +117,6 @@ class ServingIngestSpec extends SparkSuite {
     KeyValue.ensureStoreDaily(spark, fix)
     val rows = Seq(ev(3001L, "2024-01-07", 1L, "click", 3.5)).toDF()
     ServingIngest.appendEvents(spark, fix, rows, batchId = 0L)
-    KeyValue.invalidate(spark, fix)
     val store = KeyValue.ensureStoreDaily(spark, fix)
     val state = dayDirs(store)
     val rowsAfterFirst = storeRows(KeyValue.loadDailyStore(spark, fix))
@@ -125,10 +125,61 @@ class ServingIngestSpec extends SparkSuite {
     // the append clears its own previous file set and re-lands, the
     // day fingerprints don't move, the store is not rewritten
     ServingIngest.appendEvents(spark, fix, rows, batchId = 0L)
-    KeyValue.invalidate(spark, fix)
     KeyValue.ensureStoreDaily(spark, fix)
     assert(dayDirs(store) == state, "identical replayed content must not refresh any day")
     assert(storeRows(KeyValue.loadDailyStore(spark, fix)) == rowsAfterFirst,
       "no double-counting under batch replay")
+  }
+
+  test("lookups racing a streamed refresh never fail and the store ends exact") {
+    setUp()
+    KeyValue.ensureStoreDaily(spark, fix)
+    KeyValue.dailyStoreCached(spark, fix).count()
+    // two landed files → two micro-batches: a new day plus an edited
+    // one, then late data for another existing day
+    val spool = s"$base/spool"
+    Seq(ev(4001L, "2024-02-01", 2L, "click", 1.75),
+        ev(4002L, "2024-01-03", 1L, "purchase", 7.25)).toDF()
+      .coalesce(1).write.mode("append").parquet(spool)
+    Seq(ev(4003L, "2024-01-05", 0L, "view", 2.5)).toDF()
+      .coalesce(1).write.mode("append").parquet(spool)
+    val schema = spark.read.parquet(spool).schema
+
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val lookups = new java.util.concurrent.atomic.AtomicInteger
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val keys = Seq("DATE#2024-01-03", "DATE#2024-01-05", "DATE#2024-02-01",
+      "GENRE#click#DATE#2024-01-03")
+    val readers = keys.map { pk =>
+      val t = new Thread(() =>
+        while (!stop.get) {
+          try {
+            KeyValue.dailyStoreCached(spark, fix).filter(col("pk") === pk).collect()
+            lookups.incrementAndGet()
+          } catch { case e: Throwable => failures.add(s"$pk: $e") }
+        })
+      t.start()
+      t
+    }
+    val batches =
+      try {
+        var ids = Vector.empty[Long]
+        ServingIngest.start(spark,
+            FileSourceConfig(spool, "parquet", schema, Map("maxFilesPerTrigger" -> "1")),
+            s"$base/ckpt_race", fix, onBatch = (id, _) => ids = ids :+ id)
+          .awaitTermination()
+        ids
+      } finally {
+        stop.set(true)
+        readers.foreach(_.join())
+      }
+    assert(batches == Vector(0L, 1L), s"two micro-batches: $batches")
+    assert(failures.isEmpty, failures.asScala.take(5).mkString("\n"))
+    assert(lookups.get > 0)
+    // the store reads cleanly and equals a from-scratch recompute
+    assert(storeRows(KeyValue.loadDailyStore(spark, fix)) ==
+      storeRows(KeyValue.servingTable(spark, fix)))
+    assert(KeyValue.dailyStoreCached(spark, fix)
+      .filter(col("pk") === "DATE#2024-02-01").count() > 0L)
   }
 }
