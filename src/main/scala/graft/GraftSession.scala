@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place the engine's required session config lives — every
-  * entry point (Verify, Bench, Smoke, PlanAudit, tests) builds through
+  * entry point (Verify, Bench, Smoke, Profile, tests) builds through
   * here so a new required setting cannot silently miss one of them.
   */
 object GraftSession {
@@ -59,14 +59,19 @@ object GraftSession {
     * on the driver. Map-typed columns (unhashable in Spark) would be
     * skipped — no registered query emits one.
     */
-  def forceAndCount(df: org.apache.spark.sql.DataFrame): Long = {
+  def forceAndCount(df: org.apache.spark.sql.DataFrame): Long =
+    forced(df).head().getLong(0)
+
+  /** The one-row frame [[forceAndCount]] runs: column 0 is the row
+    * count of `df`.
+    */
+  def forced(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.MapType
     val hashable = df.schema.fields
       .filterNot(_.dataType.isInstanceOf[MapType]).map(f => col(f.name))
-    if (hashable.isEmpty) df.count()
+    if (hashable.isEmpty) df.agg(count(lit(1)).as("n"))
     else df.select(xxhash64(hashable: _*).as("__h"))
       .agg(count(lit(1)).as("n"), sum(col("__h")))
-      .head().getLong(0)
   }
 }

@@ -6,11 +6,13 @@ import org.apache.spark.sql.functions._
 /** Committed A/B probe harness behind the SCALING.md kernel claims —
   * so every "native kernel vs compositional tree" number in the doc is
   * reproducible from the tree it ships with. Each probe is a named
-  * thunk over `SPARK_GRAFT_SF_DIR`; the runner times two runs of each
-  * requested name (run2 = warm number, the one the doc quotes).
+  * thunk over a fixture directory; [[graft.Profile]] runs them by name
+  * like registered queries (run 2 or 3 = the warm number the doc
+  * quotes):
   *
-  *   sbt "runMain graft.ProbeAb cms_kernel cms_hex"     # CMS A/B
-  *   sbt "runMain graft.ProbeAb bpe_stream bpe_kernel bpe_fold"
+  *   sbt "runMain graft.Profile cms_kernel cms_hex"     # CMS A/B
+  *   sbt "runMain graft.Profile bpe_stream bpe_kernel bpe_fold"
+  *   sbt "runMain graft.Profile cc_label cc_star"       # CC engine A/B
   *
   * The BPE trio decomposes the encode family: `bpe_stream` is the
   * word stream alone (explode + filter + per-doc agg, no
@@ -23,7 +25,26 @@ object ProbeAb {
     docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "")
 
+  /** The image rep-pair graph the image-group queries feed the CC
+    * engines: one representative per distinct dhash, Hamming ≤ 3 pairs.
+    */
+  private def imageRepPairs(s: SparkSession, d: String): DataFrame = {
+    val dir = ext.MediaFeatures.defaultDir(d)
+    ext.MediaFeatures.ensure(s, Tables.documents(s, d), dir)
+    val sigs = ext.MediaFeatures.features(s, dir)
+      .select(col("doc_id"), col("dhash").as("sig"))
+      .filter(col("sig").isNotNull)
+    val reps = sigs.groupBy(col("sig")).agg(min(col("doc_id")).as("rep_id"))
+      .select(col("rep_id").as("doc_id"), col("sig")).localCheckpoint()
+    ext.Dedup.hammingPairs(reps, 3, 256).localCheckpoint()
+  }
+
   def probes: Map[String, (SparkSession, String) => DataFrame] = Map(
+    // the two distributed connected-component engines on one graph
+    // (label propagation vs alternating star contraction); both pay
+    // the same graph build, so their differences are the engines'
+    "cc_label" -> ((s, d) => ext.Dedup.duplicateGroupsDistributed(imageRepPairs(s, d))),
+    "cc_star" -> ((s, d) => ext.Dedup.starContractionGroupsDistributed(imageRepPairs(s, d))),
     // media-gate decomposition (per-doc .bin arrival shape — the
     // variant the landed parquet-spool gate REPLACED): the same files
     // as a BATCH binaryFile scan + decode + agg (no streaming
@@ -269,23 +290,4 @@ object ProbeAb {
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_words"), sum(col("k")).as("n_tokens"))
     }))
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-    spark.read.parquet(s"$sfDir/documents.parquet").foreach(_ => ())
-    val (flags, names) = args.partition(_.startsWith("--"))
-    names.foreach { name =>
-      if (flags.contains("--explain"))
-        println(s"[probe] $name plan:\n" +
-          probes(name)(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      (1 to 2).foreach { i =>
-        val t0 = System.nanoTime()
-        GraftSession.forceAndCount(probes(name)(spark, sfDir))
-        println(s"[probe] $name run$i ${(System.nanoTime() - t0) / 1e9}")
-      }
-    }
-    spark.stop()
-  }
 }

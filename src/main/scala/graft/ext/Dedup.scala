@@ -485,7 +485,7 @@ object Dedup {
     * bit_count(xor) ≤ maxHamming. Join key is (chunk-index,
     * chunk-value) — candidates only, never all-pairs.
     */
-  private[ext] def hammingPairs(sigs: DataFrame, maxHamming: Int = 3,
+  private[graft] def hammingPairs(sigs: DataFrame, maxHamming: Int = 3,
                                 maxBucket: Int = 256): DataFrame = {
     val chunked = sigs.select(col("doc_id"), col("sig"),
       posexplode(array((0 until 4).map(i =>
@@ -703,53 +703,84 @@ object Dedup {
 
   /** Driver-local connected components over a bounded pair list — the
     * shared fast path of [[duplicateGroups]] and
-    * [[starContractionGroups]], generalizing [[applyDedupLocal]]'s
-    * union-find. At fixture scale the iterative engines cost pure
-    * sequential driver rounds (per-superstep plan→RDD, convergence
-    * counts, broadcast-submission jobs — ~80 ms each, DiagJobs); an
-    * edge list PROVABLY under the gate — the bounded collect itself is
-    * the proof (`limit(gate+1)`) — is cheaper to union-find locally.
-    * Returns None when the graph exceeds the gate, else the exact
-    * (doc_id, group_id = component-min) labeling of every endpoint of
-    * the pair graph — the iterative engines' documented output
-    * contract (equality spec-pinned in DedupSpec).
+    * [[starContractionGroups]] (via [[components]]). At fixture scale
+    * the iterative engines cost pure sequential driver rounds
+    * (per-superstep plan→RDD, convergence counts, broadcast-submission
+    * jobs — ~80 ms each, measured with `graft.Profile`'s per-job
+    * durations); an edge list PROVABLY under the gate — the bounded
+    * collect itself is the proof (`limit(gate+1)`) — is cheaper to
+    * union-find locally. Returns None when the graph exceeds `maxEdges`,
+    * else the exact (doc_id, group_id = component-min) labeling of
+    * every endpoint of the pair graph. Expects null-free edges.
     */
-  private[ext] def localComponents(pairs: DataFrame): Option[DataFrame] = {
+  private[ext] def localComponents(pairs: DataFrame,
+      maxEdges: Int = LocalCcMaxEdges): Option[DataFrame] = {
     val idType = pairs.schema.fields.find(_.name == "a_id").map(_.dataType)
       .getOrElse(org.apache.spark.sql.types.LongType)
     val edges = pairs
       .select(col("a_id").cast("long"), col("b_id").cast("long"))
-      .limit(LocalCcMaxEdges + 1).collect()
-    if (edges.length > LocalCcMaxEdges) None
+      .limit(maxEdges + 1).collect()
+    if (edges.length > maxEdges) None
     else {
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      edges.foreach { r =>
-        val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb) // root = min id
-      }
-      val nodes = edges.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct
       import pairs.sparkSession.implicits._
-      val out = nodes.toSeq.map(n => (n, find(n))).toDF("doc_id", "group_id")
+      val out = unionFind(edges.map(r => (r.getLong(0), r.getLong(1))))
+        .toSeq.toDF("doc_id", "group_id")
       Some(out.select(col("doc_id").cast(idType).as("doc_id"),
         col("group_id").cast(idType).as("group_id")))
     }
   }
 
+  /** Union-find over an edge list: every endpoint → its component's
+    * minimum id (the root is always the smaller of two merged roots).
+    */
+  private def unionFind(edges: Array[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb) // root = min id
+    }
+    edges.iterator.flatMap(e => Iterator(e._1, e._2)).map(n => n -> find(n)).toMap
+  }
+
+  /** The pair-graph edges connected components are taken over: a row
+    * with a null `a_id` or `b_id` names no document and is dropped.
+    */
+  private def nonNullEdges(pairs: DataFrame): DataFrame =
+    pairs.filter(col("a_id").isNotNull && col("b_id").isNotNull)
+
+  /** Connected components of a pair graph, one output contract for
+    * every path: a (doc_id, group_id = component-min doc_id) row for
+    * each id that appears as an endpoint of a non-null edge — so a node
+    * whose only edge is a self-loop labels itself, and an edge with a
+    * null endpoint is dropped once, here, before the size gate (it is
+    * never merged into a group, and it never reaches a path that would
+    * treat it differently). Graphs of at most `maxEdges` edges take the
+    * driver union-find ([[localComponents]]); larger ones run
+    * `distributed`.
+    */
+  private[ext] def components(pairs: DataFrame, distributed: DataFrame => DataFrame,
+      maxEdges: Int = LocalCcMaxEdges): DataFrame = {
+    val edges = nonNullEdges(pairs)
+    localComponents(edges, maxEdges).getOrElse(distributed(edges))
+  }
+
+  /** Connected components by label propagation; output contract and
+    * null/self-loop handling as in [[components]].
+    */
   def duplicateGroups(pairs: DataFrame, maxIter: Int = 20): DataFrame =
-    localComponents(pairs)
-      .getOrElse(duplicateGroupsDistributed(pairs, maxIter))
+    components(pairs, duplicateGroupsDistributed(_, maxIter))
 
   /** The distributed label-propagation engine behind [[duplicateGroups]]
     * — runs when the pair graph exceeds [[LocalCcMaxEdges]].
     */
-  private[ext] def duplicateGroupsDistributed(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  private[graft] def duplicateGroupsDistributed(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
     // Materialize the (small) edge list once — every superstep joins it,
     // and without the checkpoint each iteration would recompute the
@@ -822,17 +853,17 @@ object Dedup {
     * (astronomically unlikely, but possible) can never terminate the
     * loop early with wrong groups; it costs the exact comparison only on
     * the final (or a colliding) round. Same output contract as
-    * [[duplicateGroups]]: (doc_id, group_id = component min) for every
-    * node of the pair graph.
+    * [[duplicateGroups]], set out in [[components]]: (doc_id, group_id
+    * = component min) for every endpoint of a non-null edge, a node
+    * whose only edge is a self-loop included.
     */
   def starContractionGroups(pairs: DataFrame, maxIter: Int = 30): DataFrame =
-    localComponents(pairs)
-      .getOrElse(starContractionGroupsDistributed(pairs, maxIter))
+    components(pairs, starContractionGroupsDistributed(_, maxIter))
 
   /** The distributed star-contraction engine behind
     * [[starContractionGroups]] — runs above [[LocalCcMaxEdges]].
     */
-  private[ext] def starContractionGroupsDistributed(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
+  private[graft] def starContractionGroupsDistributed(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // Each half-step works on undirected neighborhoods: symmetrize, take
     // the per-node min m = min(N(u) ∪ {u}) with one window, re-point.
@@ -859,9 +890,10 @@ object Dedup {
     // Lazy checkpoints: the checksum aggregate is the action that
     // materializes each round's edges, so a round costs one job, not two
     // (an eager checkpoint would run its own).
-    var edges = pairs
+    val all = pairs
       .select(col("a_id").as("u"), col("b_id").as("v"))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint(false)
+      .distinct().localCheckpoint(false)
+    var edges = all.filter(col("u") =!= col("v"))
     var prev = checksum(edges)
     var prevEdges = edges
     var i = 0
@@ -883,9 +915,14 @@ object Dedup {
     // only on the v side; they label themselves.
     val roots = edges.select(col("v")).distinct()
       .join(edges.select(col("u").as("v")).distinct(), Seq("v"), "left_anti")
-    edges.select(col("u").as("doc_id"), col("v").as("group_id"))
+    val labeled = edges.select(col("u").as("doc_id"), col("v").as("group_id"))
       .unionByName(roots.select(col("v").as("doc_id"), col("v").as("group_id")))
       .distinct()
+    // self-loops never enter the contraction; a node with no other
+    // edge labels itself
+    val loopOnly = all.filter(col("u") === col("v")).select(col("u").as("doc_id"))
+      .distinct().join(labeled, Seq("doc_id"), "left_anti")
+    labeled.unionByName(loopOnly.select(col("doc_id"), col("doc_id").as("group_id")))
   }
 
   /** Exact set equality of two distinct-row edge frames — the
@@ -919,29 +956,18 @@ object Dedup {
     * iterative CC — whose cost at this size is the driver round-trips
     * of its convergence checks, not the data — loses to collecting the
     * EDGE LIST (pairs only, never documents) and running union-find on
-    * the driver. Same keeper rule (component-min doc_id), equality with
+    * the driver. Same keeper rule (component-min doc_id) and the same
+    * drop of null-endpoint edges as [[components]], equality with
     * [[applyDedup]] spec-pinned; the corpus-scale paths keep the
     * distributed algorithms.
     */
   def applyDedupLocal(corpus: DataFrame, pairs: DataFrame): DataFrame = {
-    val edges = pairs.select(col("a_id").cast("long"), col("b_id").cast("long"))
+    val edges = nonNullEdges(pairs)
+      .select(col("a_id").cast("long"), col("b_id").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     if (edges.isEmpty) corpus
     else {
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb) // root = min id
-      }
-      val members = edges.flatMap(e => Seq(e._1, e._2)).distinct
-      val losers = members.filter(m => find(m) != m)
+      val losers = unionFind(edges).collect { case (m, root) if m != root => m }
       import corpus.sparkSession.implicits._
       corpus.join(broadcast(losers.toSeq.toDF("doc_id")), Seq("doc_id"), "left_anti")
     }

@@ -44,8 +44,9 @@ object StreamQueries {
     * stateful micro-batch pays one state-store instance — open, commit,
     * delta file, maintenance — per `spark.sql.shuffle.partitions`,
     * EVERY batch, regardless of data volume; measured on the fixture
-    * (DiagStream2) the stateful `addBatch` is ~0.65 s at 8 state
-    * partitions vs ~1.8 s at 32 for identical input. Batch queries are
+    * (per-trigger `durationMs`, as `graft.Profile` reports it) the
+    * stateful `addBatch` is ~0.65 s at 8 state partitions vs ~1.8 s
+    * at 32 for identical input. Batch queries are
     * protected by AQE coalescing to `advisoryPartitionSizeInBytes`;
     * this applies the SAME sizing rule at stream start:
     * partitions = clamp(inputBytes / advisory, 1, configured).

@@ -5,6 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.scheduler.SparkListenerEvent
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
 /** Column ⇄ Expression / plan ⇄ DataFrame bridge. Spark 4 made these
   * conversions `private[sql]` (Connect refactor); extension libraries
@@ -56,5 +59,20 @@ object bridge {
     else if (plan.find(p =>
         p.expressions.exists(e => e.exists(!_.deterministic))).isDefined) None
     else Some(plan.canonicalized.toString)
+  }
+
+  /** Blocks until every listener has handled every event posted so far. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The end of a named SQL action (collect, count, save, …) on any
+    * session of the context: its name, seconds and QueryExecution —
+    * what a session's execution listener hears, without its session
+    * scope.
+    */
+  def actionEnd(e: SparkListenerEvent): Option[(String, Double, QueryExecution)] = e match {
+    case end: SparkListenerSQLExecutionEnd =>
+      end.executionName.map(n => (n, end.duration / 1e9, end.qe))
+    case _ => None
   }
 }

@@ -3,25 +3,54 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 /** One concern, one mechanism: every memo map, lock map and
   * identity-keyed cache in the engine goes through
-  * [[graft.ext.ArtifactCache]] (README, *Caching*).
+  * [[graft.ext.ArtifactCache]] (README, *Caching*); every listener goes
+  * through [[graft.Profile]] (README, *Profiling*); and a new `main`
+  * takes a deliberate edit here.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
-  test("memo and lock maps appear in src/main only inside ArtifactCache.scala") {
-    val banned = """TrieMap|WeakHashMap|identityHashCode""".r
-    val sources = Files.walk(Paths.get("src/main")).iterator.asScala
+  private lazy val sources: List[Path] = {
+    val all = Files.walk(Paths.get("src/main")).iterator.asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
-      .filterNot(_.getFileName.toString == "ArtifactCache.scala")
       .toList
-    assert(sources.nonEmpty, "run from the repository root")
-    val offenders = for {
-      p: Path <- sources
-      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
-      if banned.findFirstIn(line).isDefined
-    } yield s"$p:${i + 1}: ${line.trim}"
-    assert(offenders.isEmpty, offenders.mkString("\n"))
+    assert(all.nonEmpty, "run from the repository root")
+    all
+  }
+
+  private def lines(p: Path): List[String] = Files.readAllLines(p).asScala.toList
+
+  /** `file:line: text` of every line matching `banned` outside `home`. */
+  private def offenders(banned: Regex, home: String): List[String] = for {
+    p <- sources if p.getFileName.toString != home
+    (line, i) <- lines(p).zipWithIndex
+    if banned.findFirstIn(line).isDefined
+  } yield s"$p:${i + 1}: ${line.trim}"
+
+  test("memo and lock maps appear in src/main only inside ArtifactCache.scala") {
+    val found = offenders("""TrieMap|WeakHashMap|identityHashCode""".r, "ArtifactCache.scala")
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("listeners appear in src/main only inside Profile.scala") {
+    val found = offenders(
+      """\b(SparkListener|QueryExecutionListener|StreamingQueryListener)\b""".r,
+      "Profile.scala")
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("the objects in src/main that define a main method are the listed entry points") {
+    val objectDecl = """^object\s+(\w+).*""".r
+    val withMain = for {
+      p <- sources
+      ls = lines(p)
+      (line, i) <- ls.zipWithIndex if line.contains("def main(")
+    } yield ls.take(i).reverse.collectFirst { case objectDecl(n) => n }.getOrElse(s"$p:${i + 1}")
+    assert(withMain.sorted == Seq("AnnScale", "Bench", "BucketScale", "ExportScale",
+      "IndexScale", "IngestScale", "KpiScale", "LmScale", "Maintenance", "PcaScale",
+      "Profile", "ScaleUp", "ServeScale", "Smoke", "Verify", "Warm"))
   }
 }

@@ -92,27 +92,32 @@ class DedupSpec extends SparkSuite {
 
   test("localComponents fast path ≡ both distributed CC engines") {
     // long chain (diameter 6), a star, a triangle with a cross edge,
-    // reversed-order edges, and a self-loop — every shape the engines
-    // must agree on
-    val pairs = Seq(
+    // reversed-order edges, a self-loop and an edge with a null
+    // endpoint — every shape the engines must agree on
+    val pairs = Seq[(java.lang.Long, java.lang.Long)](
       (10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L), (14L, 15L), (15L, 16L),
       (20L, 25L), (20L, 24L), (20L, 23L),
       (31L, 32L), (32L, 33L), (33L, 31L), (33L, 30L),
       (42L, 41L), // reversed order: min is on the b side
-      (50L, 50L)  // self-loop labels itself
+      (50L, 50L), // self-loop labels itself
+      (60L, null) // names no document: dropped, 60 is in no group
     ).toDF("a_id", "b_id")
-    val local = Dedup.localComponents(pairs).get
-      .as[(Long, Long)].collect().toMap
-    val lp = Dedup.duplicateGroupsDistributed(pairs)
-      .as[(Long, Long)].collect().toMap
-    val star = Dedup.starContractionGroupsDistributed(pairs)
-      .as[(Long, Long)].collect().toMap
+    def labels(cc: org.apache.spark.sql.DataFrame) =
+      cc.as[(Long, Long)].collect().toMap
+    // maxEdges = 0 sends the same input past the gate to each engine
+    val local = labels(Dedup.components(pairs, _ => fail("gate not taken")))
+    val lp = labels(Dedup.components(pairs, Dedup.duplicateGroupsDistributed(_), 0))
+    val star = labels(Dedup.components(pairs, Dedup.starContractionGroupsDistributed(_), 0))
     assert(local == lp, s"union-find vs label propagation: $local vs $lp")
-    assert(local.view.filterKeys(_ != 50L).toMap ==
-      star.view.filterKeys(_ != 50L).toMap,
-      s"union-find vs star contraction: $local vs $star")
+    assert(local == star, s"union-find vs star contraction: $local vs $star")
     assert(local(16L) == 10L && local(25L) == 20L && local(30L) == 30L &&
-      local(41L) == 41L && local(42L) == 41L && local(50L) == 50L)
+      local(41L) == 41L && local(42L) == 41L && local(50L) == 50L &&
+      !local.contains(60L) && local.size == 18)
+    // the removal twins read the same edges the same way
+    val corpus = (10L to 60L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    def kept(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").as[Long].collect().toSet
+    assert(kept(Dedup.applyDedupLocal(corpus, pairs)) == kept(Dedup.applyDedup(corpus, pairs)))
     // empty graph: empty labeling, same schema
     val empty = Dedup.localComponents(
       Seq.empty[(Long, Long)].toDF("a_id", "b_id")).get
