@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *
   *   sbt "runMain graft.Profile cms_kernel cms_hex"     # CMS A/B
   *   sbt "runMain graft.Profile bpe_stream bpe_kernel bpe_fold"
-  *   sbt "runMain graft.Profile cc_label cc_star"       # CC engine A/B
+  *   sbt "runMain graft.Profile cc"                     # distributed CC
   *
   * The BPE trio decomposes the encode family: `bpe_stream` is the
   * word stream alone (explode + filter + per-doc agg, no
@@ -26,7 +26,7 @@ object ProbeAb {
       .filter(col("w") =!= "")
 
   /** The image rep-pair graph the image-group queries feed the CC
-    * engines: one representative per distinct dhash, Hamming ≤ 3 pairs.
+    * engine: one representative per distinct dhash, Hamming ≤ 3 pairs.
     */
   private def imageRepPairs(s: SparkSession, d: String): DataFrame = {
     val dir = ext.MediaFeatures.defaultDir(d)
@@ -40,11 +40,9 @@ object ProbeAb {
   }
 
   def probes: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // the two distributed connected-component engines on one graph
-    // (label propagation vs alternating star contraction); both pay
-    // the same graph build, so their differences are the engines'
-    "cc_label" -> ((s, d) => ext.Dedup.duplicateGroupsDistributed(imageRepPairs(s, d))),
-    "cc_star" -> ((s, d) => ext.Dedup.starContractionGroupsDistributed(imageRepPairs(s, d))),
+    // the distributed connected-components engine on the image
+    // rep-pair graph, past the driver union-find gate
+    "cc" -> ((s, d) => ext.Dedup.duplicateGroupsDistributed(imageRepPairs(s, d))),
     // media-gate decomposition (per-doc .bin arrival shape — the
     // variant the landed parquet-spool gate REPLACED): the same files
     // as a BATCH binaryFile scan + decode + agg (no streaming

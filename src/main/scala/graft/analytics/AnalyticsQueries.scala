@@ -269,7 +269,8 @@ object AnalyticsQueries {
     // DeclarativeAggregate twin over k packed long slots
     // (topk_packed_agg), which plans as a whole-stage HashAggregate;
     // same ordering contract, equality spec-pinned in
-    // TopKAggregatorSpec.
+    // TopKAggregatorSpec, where the typed class lives on as the
+    // reference model.
     "a8_topk_aggregator" -> ((s, d) => {
       val topk = (m: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =>
         graft.functions.native.topk_packed_agg(m, i, 3)

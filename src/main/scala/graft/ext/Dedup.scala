@@ -192,13 +192,13 @@ object Dedup {
     Artifact.requireKind(spark, pairDir, "neardup v2 ")
     val srcMeta = Artifact.readMeta(spark, pairDir).get
     Artifact.ensure(spark, dir, s"dupgroups v1 minJaccard=$minJaccard src={$srcMeta}") {
-      starContractionGroups(loadPairs(spark, pairDir, minJaccard))
+      duplicateGroups(loadPairs(spark, pairDir, minJaccard))
         .write.mode("overwrite").parquet(s"$dir/groups")
     }
   }
 
   /** Read the persisted group labels — equals
-    * [[starContractionGroups]] over [[loadPairs]] at build parameters.
+    * [[duplicateGroups]] over [[loadPairs]] at build parameters.
     */
   def loadGroups(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     Artifact.requireKind(spark, dir, "dupgroups v1 ")
@@ -697,14 +697,13 @@ object Dedup {
   /** Edge-count gate for the driver-local CC fast path: ≤ 2²⁰ edges is
     * ~16 MB collected — the "collect the small side" regime a broadcast
     * join already accepts (guide §3.1/§5). Above it, the distributed
-    * engines run unchanged (a 100 TB corpus's pair graph lands there).
+    * engine runs unchanged (a 100 TB corpus's pair graph lands there).
     */
   private[ext] val LocalCcMaxEdges: Int = 1 << 20
 
   /** Driver-local connected components over a bounded pair list — the
-    * shared fast path of [[duplicateGroups]] and
-    * [[starContractionGroups]] (via [[components]]). At fixture scale
-    * the iterative engines cost pure sequential driver rounds
+    * fast path of [[duplicateGroups]] (via [[components]]). At fixture
+    * scale the iterative engine costs pure sequential driver rounds
     * (per-superstep plan→RDD, convergence counts, broadcast-submission
     * jobs — ~80 ms each, measured with `graft.Profile`'s per-job
     * durations); an edge list PROVABLY under the gate — the bounded
@@ -749,38 +748,35 @@ object Dedup {
     edges.iterator.flatMap(e => Iterator(e._1, e._2)).map(n => n -> find(n)).toMap
   }
 
-  /** The pair-graph edges connected components are taken over: a row
-    * with a null `a_id` or `b_id` names no document and is dropped.
-    */
-  private def nonNullEdges(pairs: DataFrame): DataFrame =
-    pairs.filter(col("a_id").isNotNull && col("b_id").isNotNull)
-
   /** Connected components of a pair graph, one output contract for
-    * every path: a (doc_id, group_id = component-min doc_id) row for
+    * both paths: a (doc_id, group_id = component-min doc_id) row for
     * each id that appears as an endpoint of a non-null edge — so a node
     * whose only edge is a self-loop labels itself, and an edge with a
-    * null endpoint is dropped once, here, before the size gate (it is
-    * never merged into a group, and it never reaches a path that would
-    * treat it differently). Graphs of at most `maxEdges` edges take the
+    * null `a_id` or `b_id` names no document and is dropped once, here,
+    * before the size gate. Graphs of at most `maxEdges` edges take the
     * driver union-find ([[localComponents]]); larger ones run
-    * `distributed`.
+    * [[duplicateGroupsDistributed]].
     */
-  private[ext] def components(pairs: DataFrame, distributed: DataFrame => DataFrame,
+  private[graft] def components(pairs: DataFrame,
       maxEdges: Int = LocalCcMaxEdges): DataFrame = {
-    val edges = nonNullEdges(pairs)
-    localComponents(edges, maxEdges).getOrElse(distributed(edges))
+    val edges = pairs.filter(col("a_id").isNotNull && col("b_id").isNotNull)
+    localComponents(edges, maxEdges).getOrElse(duplicateGroupsDistributed(edges))
   }
 
-  /** Connected components by label propagation; output contract and
-    * null/self-loop handling as in [[components]].
+  /** Connected components of a near-dup pair graph: every endpoint
+    * labeled with its component-min doc_id; the contract, and the
+    * null/self-loop handling, as in [[components]].
     */
-  def duplicateGroups(pairs: DataFrame, maxIter: Int = 20): DataFrame =
-    components(pairs, duplicateGroupsDistributed(_, maxIter))
+  def duplicateGroups(pairs: DataFrame): DataFrame = components(pairs)
 
-  /** The distributed label-propagation engine behind [[duplicateGroups]]
-    * — runs when the pair graph exceeds [[LocalCcMaxEdges]].
+  /** The distributed engine behind [[duplicateGroups]] — runs when the
+    * pair graph exceeds [[LocalCcMaxEdges]]. Min-label propagation:
+    * every superstep lowers each node's label to the minimum over its
+    * neighbors. Labels only decrease, so the loop always ends; it stops
+    * on the exact test "no label changed", after at most diameter + 1
+    * supersteps, with no round cap.
     */
-  private[graft] def duplicateGroupsDistributed(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  private[graft] def duplicateGroupsDistributed(pairs: DataFrame): DataFrame = {
     val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
     // Materialize the (small) edge list once — every superstep joins it,
     // and without the checkpoint each iteration would recompute the
@@ -814,8 +810,7 @@ object Dedup {
       .select(col("id"), col("id").as("label"))
       .localCheckpoint(false)
     var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
+    while (changed > 0) {
       val nbrMin = sym.join(lab, sym("dst") === lab("id"))
         .select(col("src"), col("label"))
         // the round's ONE exchange, pinned to p so the aggregate output
@@ -830,147 +825,22 @@ object Dedup {
         .localCheckpoint(false)
       changed = next.filter(col("label") =!= col("old")).count()
       lab = next.select(col("id"), col("label"))
-      i += 1
     }
     lab.select(col("id").as("doc_id"), col("label").as("group_id"))
   }
 
-  /** Connected components by alternating large-star / small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond") — the algorithm whose round count is O(log n) regardless
-    * of graph shape, where plain label propagation
-    * ([[duplicateGroups]]) needs diameter rounds. Each half-step is one
-    * shuffle (a per-node min window over the directed edge list):
-    *
-    *  - large-star: every neighbor v > u re-points to m = min(N(u) ∪ u)
-    *  - small-star: every neighbor v ≤ u (and u itself) points to m
-    *
-    * The edge list converges to stars rooted at each component's
-    * minimum. Convergence detection is two-tier: a cheap per-round
-    * checksum (count + order-independent hash sum; one tiny aggregate,
-    * no data on the driver) triggers an *exact* [[sameEdgeSet]]
-    * confirmation — so a hash-sum collision between different edge sets
-    * (astronomically unlikely, but possible) can never terminate the
-    * loop early with wrong groups; it costs the exact comparison only on
-    * the final (or a colliding) round. Same output contract as
-    * [[duplicateGroups]], set out in [[components]]: (doc_id, group_id
-    * = component min) for every endpoint of a non-null edge, a node
-    * whose only edge is a self-loop included.
-    */
-  def starContractionGroups(pairs: DataFrame, maxIter: Int = 30): DataFrame =
-    components(pairs, starContractionGroupsDistributed(_, maxIter))
-
-  /** The distributed star-contraction engine behind
-    * [[starContractionGroups]] — runs above [[LocalCcMaxEdges]].
-    */
-  private[graft] def starContractionGroupsDistributed(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // Each half-step works on undirected neighborhoods: symmetrize, take
-    // the per-node min m = min(N(u) ∪ {u}) with one window, re-point.
-    // Emitted edges are always (child > parent), a canonical direction.
-    def half(edges: DataFrame, largeStar: Boolean): DataFrame = {
-      val sym = edges.unionByName(
-        edges.select(col("v").as("u"), col("u").as("v")))
-      val withM = sym.withColumn("m",
-        least(min(col("v")).over(Window.partitionBy(col("u"))), col("u")))
-      val repointed =
-        if (largeStar)
-          withM.filter(col("v") > col("u"))
-            .select(col("v").as("u"), col("m").as("v"))
-        else
-          withM.filter(col("v") < col("u"))
-            .select(col("v").as("u"), col("m").as("v"))
-            .unionByName(withM.select(col("u"), col("m").as("v")))
-      repointed.filter(col("u") =!= col("v")).distinct()
-    }
-    def checksum(edges: DataFrame): (Long, Long) = {
-      val r = edges.agg(count(lit(1)), sum(xxhash64(col("u"), col("v")))).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    // Lazy checkpoints: the checksum aggregate is the action that
-    // materializes each round's edges, so a round costs one job, not two
-    // (an eager checkpoint would run its own).
-    val all = pairs
-      .select(col("a_id").as("u"), col("b_id").as("v"))
-      .distinct().localCheckpoint(false)
-    var edges = all.filter(col("u") =!= col("v"))
-    var prev = checksum(edges)
-    var prevEdges = edges
-    var i = 0
-    var stable = false
-    while (!stable && i < maxIter) {
-      val p = compactPartitions(prev._1, edges)
-      edges = half(half(edges.coalesce(p), largeStar = true), largeStar = false)
-        .coalesce(p)
-        .localCheckpoint(false)
-      val cur = checksum(edges)
-      // checksum match is only the trigger — confirm with the exact set
-      // comparison so a colliding-but-different edge set keeps iterating
-      stable = cur == prev && sameEdgeSet(edges, prevEdges)
-      prev = cur
-      prevEdges = edges
-      i += 1
-    }
-    // Converged stars: every non-root points at its root. Roots appear
-    // only on the v side; they label themselves.
-    val roots = edges.select(col("v")).distinct()
-      .join(edges.select(col("u").as("v")).distinct(), Seq("v"), "left_anti")
-    val labeled = edges.select(col("u").as("doc_id"), col("v").as("group_id"))
-      .unionByName(roots.select(col("v").as("doc_id"), col("v").as("group_id")))
-      .distinct()
-    // self-loops never enter the contraction; a node with no other
-    // edge labels itself
-    val loopOnly = all.filter(col("u") === col("v")).select(col("u").as("doc_id"))
-      .distinct().join(labeled, Seq("doc_id"), "left_anti")
-    labeled.unionByName(loopOnly.select(col("doc_id"), col("doc_id").as("group_id")))
-  }
-
-  /** Exact set equality of two distinct-row edge frames — the
-    * convergence confirmation behind [[starContractionGroups]]. Unlike
-    * any count/hash-sum checksum, this cannot be fooled by two different
-    * edge sets with colliding summaries. For distinct-row frames, equal
-    * counts + one empty `except` direction imply equality (A∖B = ∅ with
-    * |A| = |B| ⇒ A = B), so only one distributed set-difference runs;
-    * the counts are cheap on the lazily-checkpointed loop frames.
-    */
-  private[graft] def sameEdgeSet(a: DataFrame, b: DataFrame): Boolean =
-    a.count() == b.count() && a.except(b).isEmpty
-
   /** The removal form of [[duplicateGroups]]: the corpus with every
     * non-canonical dup-group member dropped (survivor = component-min
     * doc_id). One left-anti join against the (small) non-canonical id
-    * set — the corpus itself never shuffles. Components come from the
-    * star-contraction path (so both CC algorithms run under the oracle
-    * gate — `dedup_groups` uses label propagation).
+    * set — the corpus itself never shuffles. A batch-bounded pair graph
+    * (streaming micro-batch admission) takes the driver union-find
+    * through the [[components]] gate.
     */
   def applyDedup(corpus: DataFrame, pairs: DataFrame): DataFrame = {
-    val losers = starContractionGroups(pairs)
+    val losers = duplicateGroups(pairs)
       .filter(col("doc_id") =!= col("group_id"))
       .select(col("doc_id"))
     corpus.join(losers, Seq("doc_id"), "left_anti")
-  }
-
-  /** The BATCH-BOUNDED twin of [[applyDedup]] for streaming micro-batch
-    * admission: the within-batch pair graph is bounded by the batch
-    * (maxBucket-capped candidates over a bounded batch), so distributed
-    * iterative CC — whose cost at this size is the driver round-trips
-    * of its convergence checks, not the data — loses to collecting the
-    * EDGE LIST (pairs only, never documents) and running union-find on
-    * the driver. Same keeper rule (component-min doc_id) and the same
-    * drop of null-endpoint edges as [[components]], equality with
-    * [[applyDedup]] spec-pinned; the corpus-scale paths keep the
-    * distributed algorithms.
-    */
-  def applyDedupLocal(corpus: DataFrame, pairs: DataFrame): DataFrame = {
-    val edges = nonNullEdges(pairs)
-      .select(col("a_id").cast("long"), col("b_id").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    if (edges.isEmpty) corpus
-    else {
-      val losers = unionFind(edges).collect { case (m, root) if m != root => m }
-      import corpus.sparkSession.implicits._
-      corpus.join(broadcast(losers.toSeq.toDF("doc_id")), Seq("doc_id"), "left_anti")
-    }
   }
 
   /** N-gram Jaccard top-K most-similar pairs. Candidates come from the

@@ -51,9 +51,9 @@ object ExtQueries {
 
     // End-to-end dedup application: corpus minus non-canonical dup-group
     // members (each group keeps its min doc_id). Groups come from the
-    // persisted dupgroups artifact (star-contraction CC runs once per
+    // persisted dupgroups artifact (duplicateGroups runs once per
     // pair-table content — a build step, not a per-query cost); the
-    // label-propagation CC stays live under the oracle via dedup_groups.
+    // same CC stays live under the oracle via dedup_groups.
     "dedup_apply" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val dir = Dedup.ensurePairs(s, docs, s"${Artifact.root(d)}/neardup")

@@ -1674,7 +1674,7 @@ case class WavResampleNn(child: Expression, factor: Int)
 }
 
 /** Bounded top-K as a DECLARATIVE aggregate over k packed long slots —
-  * the codegen-native twin of [[TopKAggregator]] (same ordering
+  * the codegen-native twin of the typed `TopKAggregator` (same ordering
   * contract: measure descending, id ascending on ties; same
   * `array<struct<_1,_2>>` output). The typed Aggregator plans as
   * ObjectHashAggregate: every input row pays an encoder
@@ -1933,7 +1933,7 @@ object native {
   /** Bounded top-K (measure desc, id asc) as a codegen-native
     * DeclarativeAggregate over k packed long slots — see
     * [[TopKPackedAgg]]. Output `array<struct<_1 measure, _2 id>>`,
-    * identical to the typed [[TopKAggregator]] contract. Domain
+    * identical to the typed `TopKAggregator` contract. Domain
     * (asserted in-plan): 0 ≤ measure < 2³¹, 0 ≤ id < 2³².
     */
   def topk_packed_agg(measure: Column, id: Column, k: Int): Column =

@@ -75,31 +75,14 @@ class PropertySpec extends SparkSuite {
       .map(x => x -> find(x)).toMap
   }
 
-  test("property: star contraction and label propagation both equal union-find") {
+  test("property: the distributed CC engine equals union-find") {
     samples(graphGen, 6).filter(_.nonEmpty).foreach { edges =>
-      val pairs = edges.toDF("a_id", "b_id")
-      val expect = unionFind(edges)
-      val star = Dedup.starContractionGroups(pairs)
+      // maxEdges = 0: past the driver union-find gate, so the
+      // distributed engine is what runs on these small graphs
+      val groups = Dedup.components(edges.toDF("a_id", "b_id"), maxEdges = 0)
         .as[(Long, Long)].collect().toMap
-      val prop = Dedup.duplicateGroups(pairs)
-        .as[(Long, Long)].collect().toMap
-      assert(star == expect, s"star contraction diverged on $edges")
-      assert(prop == expect, s"label propagation diverged on $edges")
+      assert(groups == unionFind(edges), s"label propagation diverged on $edges")
     }
-  }
-
-  test("star-contraction convergence check is exact, not checksum-shaped") {
-    // Two edge sets engineered to collide any count + order-independent
-    // additive summary over (u+v): equal sizes, identical element sums —
-    // a convergence test weaker than exact set comparison could conflate
-    // them and stop early with wrong groups. sameEdgeSet must not.
-    val a = Seq((1L, 4L), (2L, 3L)).toDF("u", "v")
-    val b = Seq((1L, 3L), (2L, 4L)).toDF("u", "v")
-    assert(!Dedup.sameEdgeSet(a, b), "different sets with equal count+sum must not compare equal")
-    assert(!Dedup.sameEdgeSet(b, a))
-    // and exact equality holds regardless of row order / partitioning
-    val aShuffled = Seq((2L, 3L), (1L, 4L)).toDF("u", "v").repartition(3)
-    assert(Dedup.sameEdgeSet(a, aShuffled))
   }
 
   private val asofGen = for {

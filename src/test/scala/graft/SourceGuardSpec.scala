@@ -8,18 +8,22 @@ import scala.util.matching.Regex
 /** One concern, one mechanism: every memo map, lock map and
   * identity-keyed cache in the engine goes through
   * [[graft.ext.ArtifactCache]] (README, *Caching*); every listener goes
-  * through [[graft.Profile]] (README, *Profiling*); and a new `main`
-  * takes a deliberate edit here.
+  * through [[graft.Profile]] (README, *Profiling*); connected
+  * components have one distributed engine, behind
+  * [[graft.ext.Dedup.duplicateGroups]]; and a new `main` takes a
+  * deliberate edit here.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
-  private lazy val sources: List[Path] = {
-    val all = Files.walk(Paths.get("src/main")).iterator.asScala
+  private def scalaFiles(root: String): List[Path] = {
+    val all = Files.walk(Paths.get(root)).iterator.asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
       .toList
     assert(all.nonEmpty, "run from the repository root")
     all
   }
+
+  private lazy val sources: List[Path] = scalaFiles("src/main")
 
   private def lines(p: Path): List[String] = Files.readAllLines(p).asScala.toList
 
@@ -39,6 +43,17 @@ class SourceGuardSpec extends AnyFunSuite {
     val found = offenders(
       """\b(SparkListener|QueryExecutionListener|StreamingQueryListener)\b""".r,
       "Profile.scala")
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("the star-contraction CC engine and the union-find removal twin appear nowhere under src") {
+    // spelled in pieces so this file does not match itself
+    val banned = Seq("star" + "Contraction", "same" + "EdgeSet", "applyDedup" + "Local")
+    val found = for {
+      p <- scalaFiles("src")
+      (line, i) <- lines(p).zipWithIndex
+      if banned.exists(line.contains)
+    } yield s"$p:${i + 1}: ${line.trim}"
     assert(found.isEmpty, found.mkString("\n"))
   }
 

@@ -90,10 +90,10 @@ class DedupSpec extends SparkSuite {
     assert(groups == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L))
   }
 
-  test("localComponents fast path ≡ both distributed CC engines") {
+  test("localComponents fast path ≡ the distributed CC engine") {
     // long chain (diameter 6), a star, a triangle with a cross edge,
     // reversed-order edges, a self-loop and an edge with a null
-    // endpoint — every shape the engines must agree on
+    // endpoint — every shape the two paths must agree on
     val pairs = Seq[(java.lang.Long, java.lang.Long)](
       (10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L), (14L, 15L), (15L, 16L),
       (20L, 25L), (20L, 24L), (20L, 23L),
@@ -104,20 +104,27 @@ class DedupSpec extends SparkSuite {
     ).toDF("a_id", "b_id")
     def labels(cc: org.apache.spark.sql.DataFrame) =
       cc.as[(Long, Long)].collect().toMap
-    // maxEdges = 0 sends the same input past the gate to each engine
-    val local = labels(Dedup.components(pairs, _ => fail("gate not taken")))
-    val lp = labels(Dedup.components(pairs, Dedup.duplicateGroupsDistributed(_), 0))
-    val star = labels(Dedup.components(pairs, Dedup.starContractionGroupsDistributed(_), 0))
-    assert(local == lp, s"union-find vs label propagation: $local vs $lp")
-    assert(local == star, s"union-find vs star contraction: $local vs $star")
+    // the default gate takes the driver union-find (Some = under the
+    // gate); maxEdges = 0 sends the same input past it
+    val local = labels(Dedup.localComponents(pairs.na.drop()).get)
+    assert(labels(Dedup.components(pairs)) == local)
+    val dist = labels(Dedup.components(pairs, maxEdges = 0))
+    assert(local == dist, s"union-find vs label propagation: $local vs $dist")
     assert(local(16L) == 10L && local(25L) == 20L && local(30L) == 30L &&
       local(41L) == 41L && local(42L) == 41L && local(50L) == 50L &&
       !local.contains(60L) && local.size == 18)
-    // the removal twins read the same edges the same way
+    // a 64-node path (diameter 63) past the gate: every node labels to
+    // the path's minimum — no round cap may stop the engine early
+    val path = (0L until 63L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val pathLabels = labels(Dedup.components(path, maxEdges = 0))
+    assert(pathLabels == (0L to 63L).map(_ -> 0L).toMap,
+      s"path labels: ${pathLabels.filter(_._2 != 0L).toSeq.sorted}")
+    // the removal form reads the same edges the same way: every
+    // non-canonical member goes, the null-endpoint 60 stays
     val corpus = (10L to 60L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
-    def kept(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id").as[Long].collect().toSet
-    assert(kept(Dedup.applyDedupLocal(corpus, pairs)) == kept(Dedup.applyDedup(corpus, pairs)))
+    val losers = local.collect { case (d, g) if d != g => d }.toSet
+    assert(Dedup.applyDedup(corpus, pairs).select("doc_id").as[Long].collect().toSet ==
+      (10L to 60L).toSet -- losers)
     // empty graph: empty labeling, same schema
     val empty = Dedup.localComponents(
       Seq.empty[(Long, Long)].toDF("a_id", "b_id")).get
@@ -155,34 +162,30 @@ class DedupSpec extends SparkSuite {
     assert(marker.lastModified() != t1, "changed corpus must rebuild the pair table")
   }
 
-  test("applyDedupLocal equals applyDedup: same survivors, empty-graph identity") {
-    // the union-find twin must keep exactly the distributed keeper set
-    // (component-min doc_id) on a multi-component graph with chains
+  test("applyDedup: same survivors, empty-graph identity") {
+    // keeps exactly the component-min doc_id of each group on a
+    // multi-component graph with chains
     val corpus = (1L to 10L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 7L), (9L, 10L), (3L, 9L))
       .toDF("a_id", "b_id") // {1,2,3,9,10} and {5,7} → keep 1 and 5
-    val dist = Dedup.applyDedup(corpus, pairs)
-      .select("doc_id").as[Long].collect().toSet
-    val local = Dedup.applyDedupLocal(corpus, pairs)
-      .select("doc_id").as[Long].collect().toSet
-    assert(local == dist, s"local=$local dist=$dist")
-    assert(local == Set(1L, 4L, 5L, 6L, 8L))
-    // empty pair graph: identity, no job machinery
+    def kept(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").as[Long].collect().toSet
+    assert(kept(Dedup.applyDedup(corpus, pairs)) == Set(1L, 4L, 5L, 6L, 8L))
+    // empty pair graph: identity
     val empty = pairs.filter(col("a_id") < 0)
-    assert(Dedup.applyDedupLocal(corpus, empty)
-      .select("doc_id").as[Long].collect().toSet == (1L to 10L).toSet)
+    assert(kept(Dedup.applyDedup(corpus, empty)) == (1L to 10L).toSet)
   }
 
-  test("persisted group artifact: equals live star contraction, rebuilds transitively") {
+  test("persisted group artifact: equals live duplicateGroups, rebuilds transitively") {
     val pairDir = "target/dedupspec/groups_pairs"
     val gDir = "target/dedupspec/groups"
     deleteRecursively(pairDir); deleteRecursively(gDir)
     Dedup.ensurePairs(spark, docs, pairDir)
     Dedup.ensureGroups(spark, pairDir, gDir)
-    val live = Dedup.starContractionGroups(Dedup.loadPairs(spark, pairDir))
+    val live = Dedup.duplicateGroups(Dedup.loadPairs(spark, pairDir))
       .as[(Long, Long)].collect().toSet
     assert(Dedup.loadGroups(spark, gDir).as[(Long, Long)].collect().toSet == live,
-      "stored groups must equal the live star contraction")
+      "stored groups must equal the live duplicateGroups")
     // applyDedupStored equals the live applyDedup
     val liveApply = Dedup.applyDedup(docs, Dedup.loadPairs(spark, pairDir))
       .select("doc_id").as[Long].collect().toSet

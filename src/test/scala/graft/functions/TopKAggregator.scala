@@ -3,7 +3,10 @@ package graft.functions
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
-/** Bounded top-K as a typed [[Aggregator]] — the aggregation-side
+/** The reference model [[TopKAggregatorSpec]] checks the codegen-native
+  * `topk_packed_agg` against (the a8 query ran on this class before it).
+  *
+  * Bounded top-K as a typed [[Aggregator]] — the aggregation-side
   * alternative to `row_number over (...) <= k`: each partial aggregate
   * keeps at most k (measure, id) pairs, so only k rows per group per
   * mapper cross the shuffle (the same property WindowGroupLimit gives
