@@ -1,6 +1,22 @@
 package graft
 
+import graft.ingest.Validate
+import graft.sources.Csv
+import java.io.File
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.sql.{classic, DataFrame}
+import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{bridge, caches}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 /** End-to-end reference-schema pipeline: the golden semantics a user of
   * the reference expects after switching engines.
@@ -62,6 +78,99 @@ class MusicPipelineSpec extends SparkSuite {
     val out = MusicPipeline.run(streams, songs, users, Some("2025-06-22"))
     assert(out.genreKpis.filter(col("date") =!= "2025-06-22").isEmpty)
     assert(out.genreKpis.count() == 2)
+  }
+
+  private def classicSpark = spark.asInstanceOf[classic.SparkSession]
+
+  /** `written` holds the same rows as `frame`, as a multiset. */
+  private def assertSameRows(written: DataFrame, frame: DataFrame, what: String): Unit = {
+    val w = written.select(frame.columns.map(col).toIndexedSeq: _*)
+    assert(w.exceptAll(frame).isEmpty && frame.exceptAll(w).isEmpty, what)
+    assert(w.count() == frame.count(), what)
+  }
+
+  private def checkWrite(processDate: Option[String]): Unit = {
+    val dir = Files.createTempDirectory("graft-music-write").toString
+    try {
+      // the test session is shared: other suites' entries may be present
+      val entries = caches.entries(spark)
+      val out = MusicPipeline.run(streams, songs, users, processDate)
+      MusicPipeline.write(out, dir)
+      for ((name, frame) <- Seq("genre_kpis" -> out.genreKpis, "top_songs" -> out.topSongs,
+          "top_genres" -> out.topGenres, "serving" -> out.servingItems)) {
+        assertSameRows(spark.read.parquet(s"$dir/$name"), frame, name)
+        val cached = frame.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
+        assert(cached.isEmpty, s"$name reads a cached relation")
+      }
+      val parts = new File(s"$dir/serving").listFiles().map(_.getPath)
+        .filter(p => p.contains("part-") && p.endsWith(".parquet")).sorted
+      assert(parts.nonEmpty)
+      for (p <- parts) {
+        val keys = spark.read.parquet(p).select("pk", "sk").collect()
+          .map(r => (r.getString(0), r.getString(1))).toSeq
+        assert(keys == keys.sorted, s"$p is not sorted by (pk, sk)")
+      }
+      assert(caches.entries(spark) == entries, "run/write left a cache entry")
+    } finally deleteRecursively(dir)
+  }
+
+  test("write: each output directory equals its Outputs frame; serving sorted by (pk, sk)") {
+    checkWrite(None)
+  }
+
+  test("write with PROCESS_DATE: outputs equal their frames; serving sorted by (pk, sk)") {
+    checkWrite(Some("2025-06-22"))
+  }
+
+  test("an Observation on the input streams counts the validated rows once") {
+    val (observed, obs) = Validate.observed(Validate.validateStreams(streams), "kept", Nil)
+    val dir = Files.createTempDirectory("graft-music-obs").toString
+    try {
+      MusicPipeline.write(MusicPipeline.run(observed, songs, users), dir)
+      // a never-fired Observation blocks `get`; fail instead of hanging
+      val metrics = Await.result(Future(obs.get), 60.seconds)
+      assert(metrics("n_rows") == 6L)
+      assert(Validate.validateStreams(streams).count() == 6L)
+    } finally deleteRecursively(dir)
+  }
+
+  /** File scans under `root` in an executed plan, adaptive and command
+    * wrappers unwrapped (a reused exchange is a leaf: counted once).
+    */
+  private def scansUnder(p: SparkPlan, root: String): Seq[FileSourceScanExec] = p match {
+    case a: AdaptiveSparkPlanExec => scansUnder(a.executedPlan, root)
+    case q: QueryStageExec => scansUnder(q.plan, root)
+    case c: CommandResultExec => scansUnder(c.commandPhysicalPlan, root)
+    case s: FileSourceScanExec =>
+      if (s.relation.location.rootPaths.exists(_.toString.contains(root))) Seq(s) else Nil
+    case _ => p.children.flatMap(scansUnder(_, root))
+  }
+
+  test("run and write scan each source file once") {
+    val dir = Files.createTempDirectory("graft-music-scans").toString
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    def strings(df: DataFrame) = StructType(df.columns.map(StructField(_, StringType)))
+    try {
+      val in = s"$dir/in"
+      val sources = Seq("streams" -> streams, "songs" -> songs, "users" -> users)
+      for ((name, df) <- sources) df.write.option("header", "true").csv(s"$in/$name")
+      val Seq(st, so, us) = sources.map { case (name, df) => Csv.read(spark, s"$in/$name", strings(df)) }
+      bridge.drainListenerBus(spark)
+      classicSpark.listenerManager.register(listener)
+      try {
+        MusicPipeline.write(MusicPipeline.run(st, so, us), s"$dir/out")
+        bridge.drainListenerBus(spark)
+      } finally classicSpark.listenerManager.unregister(listener)
+      val scans = plans.asScala.toSeq.flatMap(scansUnder(_, in)).size
+      assert(scans >= 1 && scans <= 3, s"$scans scans of the inputs in ${plans.size} executions")
+      assert(spark.read.parquet(s"$dir/out/serving").count() ==
+        MusicPipeline.run(streams, songs, users).servingItems.count())
+    } finally deleteRecursively(dir)
   }
 
   test("SQL registration: native functions usable from spark.sql") {
