@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
   * ([[graft.serve.KeyValue.ensureStoreDaily]]): build the
   * day-partitioned store over a fixture copy, then plant ONE extra
   * event in ONE day and re-ensure — the refresh must cost a
-  * fingerprint scan plus one day's recomputation, not a rebuild of
-  * history. Prints one JSON line with build / no-op / one-day-refresh
-  * seconds.
+  * fingerprint scan of the rewritten event files plus one day's
+  * recomputation, not a rebuild of history. Prints one JSON line with
+  * build / no-op / one-day-refresh seconds.
   *
   * Usage: `runMain graft.ServeScale [srcSfDir] [workDir]`
   */
@@ -35,7 +35,8 @@ object ServeScale {
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
-    val nDays = graft.serve.KeyValue.dayFingerprints(spark, work).count()
+    val nDays = graft.serve.KeyValue.dayFingerprints(spark, work,
+      graft.serve.KeyValue.dataFiles(spark, work)).map(_.d).distinct.size
     val buildSec = timed(graft.serve.KeyValue.ensureStoreDaily(spark, work))
     val noopSec = timed(graft.serve.KeyValue.ensureStoreDaily(spark, work))
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,8 +14,26 @@ import org.apache.spark.sql.functions._
   * dimensions stay broadcast-sized or bucketed on their keys.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schema(spark, path)).parquet(path)
+  }
+
+  /** The Parquet schema of `path`, inferred once per session: inference
+    * runs a Spark job, and a read with a known schema runs none. The
+    * version is the path's file fingerprint plus the session's Parquet
+    * read settings (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`),
+    * so a landed or rewritten file, or a changed read setting such as
+    * `nanosAsLong`, infers again.
+    */
+  def schema(spark: SparkSession, path: String): StructType = {
+    val readConf = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.sorted.mkString(",")
+    graft.ext.ArtifactCache.get(spark, s"schema#$path",
+        s"${graft.ext.Artifact.fileFingerprint(spark, path)}|$readConf")(
+      graft.ext.ArtifactCache.Entry(spark.read.parquet(path).schema))
+  }
 
   /** Scale-adaptive scan-parallelism floor for the FACT tables (guide
     * §2.5, input skew: "one huge unsplittable file … repartition

@@ -124,27 +124,31 @@ object Bpe {
     * exactly "tokenizers are retrained, not patched" made persistent:
     * a shipped tokenizer is an artifact, not a per-session scratch
     * value. The loaded result is cached per (app, key), versioned by
-    * the corpus listing, so queries share one load.
+    * the artifact's metadata file, which every build rewrites: queries
+    * share one load, and a rebuilt directory (say, after it was
+    * deleted) is loaded again rather than served from files that are
+    * gone.
     */
   def trained(spark: SparkSession, docs: DataFrame, key: String,
-              nMerges: Int = 8): (Seq[Merge], DataFrame) =
+              nMerges: Int = 8): (Seq[Merge], DataFrame) = {
+    val dir = s"${Artifact.root(key)}/bpe_m$nMerges"
+    Artifact.ensure(spark, dir,
+      s"bpe v1 m=$nMerges fp=" +
+        Artifact.fingerprint(docs, col("doc_id"), col("text"))) {
+      val (m, st) = train(docs, nMerges)
+      mergeTable(spark, m).coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/merges")
+      st.write.mode("overwrite").parquet(s"$dir/state")
+    }
     ArtifactCache.get(spark.sparkContext, s"bpe#$key#$nMerges",
-        Artifact.inputListing(docs).getOrElse("")) {
-        val dir = s"${Artifact.root(key)}/bpe_m$nMerges"
-        Artifact.ensure(spark, dir,
-          s"bpe v1 m=$nMerges fp=" +
-            Artifact.fingerprint(docs, col("doc_id"), col("text"))) {
-          val (m, st) = train(docs, nMerges)
-          mergeTable(spark, m).coalesce(1)
-            .write.mode("overwrite").parquet(s"$dir/merges")
-          st.write.mode("overwrite").parquet(s"$dir/state")
-        }
-        val m = spark.read.parquet(s"$dir/merges")
-          .orderBy(col("merge_rank")).collect()
-          .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2),
-            r.getLong(3))).toSeq
-        ArtifactCache.Entry((m, spark.read.parquet(s"$dir/state")))
-      }
+        Artifact.fileFingerprint(spark, s"$dir/index_meta.txt")) {
+      val m = spark.read.parquet(s"$dir/merges")
+        .orderBy(col("merge_rank")).collect()
+        .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2),
+          r.getLong(3))).toSeq
+      ArtifactCache.Entry((m, spark.read.parquet(s"$dir/state")))
+    }
+  }
 
   /** The learned merge table as a DataFrame (merge_rank, lhs, rhs,
     * pair_n) — rank order IS the application order.

@@ -4,6 +4,7 @@ import graft.analytics.{Enrich, Kpis}
 import graft.ext.{Artifact, ArtifactCache}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The reference's DynamoDB single-table projection re-expressed as a
   * sorted `(pk, sk)` relational table (`glue_jobs/dynamodb-ingestion.py`
@@ -169,40 +170,73 @@ object KeyValue {
   private def dayOf(pk: Column): Column =
     regexp_extract(pk, "DATE#([0-9]{4}-[0-9]{2}-[0-9]{2})", 1)
 
-  /** Per-day content fingerprints of the DATE-BEARING serving inputs:
-    * `(d, ev_n, ev_h, li_n, li_h, doc_n, doc_h)` — count +
-    * order-independent hash-sum per day, one narrow scan each (with a
-    * date-partitioned fact table these scans prune to the partitions
-    * that changed). The corpus table's per-day slice keys on the
-    * derived ingest day ([[docDay]]); zeros when no corpus table
-    * exists. The non-date input (customer) gets a single file-level
-    * fingerprint in the store metadata instead: a dimension change
-    * invalidates every day.
+  /** The date-bearing serving inputs: table, the day a row lands on,
+    * and the columns its content hash covers. The corpus table's day
+    * is the derived ingest day ([[docDay]]); it counts only when the
+    * table exists.
     */
-  def dayFingerprints(spark: SparkSession, dir: String): DataFrame = {
-    val ev = graft.Tables.events(spark, dir)
-      .groupBy(to_date(col("ts")).cast("string").as("d"))
-      .agg(count(lit(1)).as("ev_n"),
-        sum(xxhash64(col("event_type"), col("ts"), col("user_id"), col("value"))).as("ev_h"))
-    val li = graft.Tables.lineitem(spark, dir)
-      .groupBy(to_date(col("l_shipdate")).cast("string").as("d"))
-      .agg(count(lit(1)).as("li_n"),
-        sum(xxhash64(col("l_returnflag"), col("l_shipdate"), col("l_partkey"))).as("li_h"))
-    val joined =
-      if (!hasDocs(spark, dir))
-        ev.join(li, Seq("d"), "full_outer")
-          .withColumn("doc_n", lit(0L)).withColumn("doc_h", lit(0L))
-      else ev.join(li, Seq("d"), "full_outer")
-        .join(graft.Tables.documents(spark, dir)
-          .groupBy(docDay(col("doc_id")).cast("string").as("d"))
-          .agg(count(lit(1)).as("doc_n"),
-            sum(xxhash64(col("doc_id"), col("lang"))).as("doc_h")),
-          Seq("d"), "full_outer")
-    joined.select(col("d"),
-      coalesce(col("ev_n"), lit(0L)).as("ev_n"), coalesce(col("ev_h"), lit(0L)).as("ev_h"),
-      coalesce(col("li_n"), lit(0L)).as("li_n"), coalesce(col("li_h"), lit(0L)).as("li_h"),
-      coalesce(col("doc_n"), lit(0L)).as("doc_n"), coalesce(col("doc_h"), lit(0L)).as("doc_h"))
+  private val DayInputs: Seq[(String, Column, Seq[String])] = Seq(
+    ("events", to_date(col("ts")), Seq("event_type", "ts", "user_id", "value")),
+    ("lineitem", to_date(col("l_shipdate")), Seq("l_returnflag", "l_shipdate", "l_partkey")),
+    ("documents", docDay(col("doc_id")), Seq("doc_id", "lang")))
+
+  /** One data file of a date-bearing input, as the fixture listing sees it. */
+  final case class DataFile(input: String, path: String, len: Long, mtime: Long)
+
+  /** The row count `n` and hash-sum `h` of one day's rows in one file. */
+  final case class Partial(input: String, path: String, d: String, n: Long, h: Long)
+
+  /** The data files of each date-bearing input: exactly the files a
+    * read of the table scans (its `inputFiles`), with length and mtime.
+    */
+  def dataFiles(spark: SparkSession, dir: String): Seq[DataFile] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    DayInputs.map(_._1).filter(n => n != "documents" || hasDocs(spark, dir)).flatMap { n =>
+      graft.Tables.table(spark, dir, n).inputFiles.sorted.toSeq.map { f =>
+        val p = new org.apache.hadoop.fs.Path(f)
+        val st = p.getFileSystem(conf).getFileStatus(p)
+        DataFile(n, f, st.getLen, st.getModificationTime)
+      }
+    }
   }
+
+  /** Per-(file, day) content fingerprints of the DATE-BEARING serving
+    * inputs over the given data files: row count plus order-independent
+    * hash-sum of each day's rows in each file, in ONE aggregation that
+    * reads only those files (no job when there are none). A day's
+    * fingerprint is the sum of its partials over every file of each
+    * input, so [[ensureStoreDaily]] scans only new or changed files and
+    * reuses the partials it keeps for the rest. The non-date input
+    * (customer) gets a single file-level fingerprint in the store
+    * metadata instead: a dimension change invalidates every day.
+    */
+  def dayFingerprints(spark: SparkSession, dir: String, files: Seq[DataFile]): Seq[Partial] = {
+    val scans = DayInputs.flatMap { case (name, day, hashed) =>
+      val paths = files.filter(_.input == name).map(_.path)
+      if (paths.isEmpty) None
+      else {
+        val raw = spark.read.schema(graft.Tables.schema(spark, s"$dir/$name.parquet"))
+          .parquet(paths: _*)
+        val t = if (name == "events") graft.Tables.normalizeEvents(raw) else raw
+        Some(t.select(lit(name).as("input"), input_file_name().as("path"),
+          day.cast("string").as("d"), xxhash64(hashed.map(col): _*).as("h")))
+      }
+    }
+    scans.reduceOption(_ unionByName _).toSeq.flatMap(
+      _.groupBy(col("input"), col("path"), col("d"))
+        .agg(count(lit(1)).as("n"), sum(col("h")).as("h"))
+        .collect().toSeq
+        .map(r => Partial(r.getString(0), r.getString(1), r.getString(2),
+          r.getLong(3), r.getLong(4))))
+  }
+
+  /** Each day's fingerprint, summed from its partials: (n, h) per input. */
+  private[graft] def dayTotals(partials: Seq[Partial]): Map[String, Map[String, (Long, Long)]] =
+    partials.groupBy(_.d).map { case (d, ps) =>
+      d -> ps.groupBy(_.input).map { case (in, qs) =>
+        in -> ((qs.map(_.n).sum, qs.map(_.h).sum))
+      }
+    }
 
   /** The serving table scoped to the given days. Every item family is
     * day-local (each aggregation and ranking window partitions on the
@@ -229,14 +263,19 @@ object KeyValue {
     * nightly DynamoDB upsert (`dynamodb-ingestion.py` writes one
     * processing day's items; history is never recomputed).
     *
-    * Freshness: a `daymeta/` sidecar stores each day's input
-    * fingerprint ([[dayFingerprints]]); on ensure, changed or new days
-    * are recomputed and swapped in via dynamic partition overwrite,
-    * days that vanished from the inputs are dropped, and untouched days
-    * are NOT rewritten (spec-asserted by file mtimes). A customer
-    * (dimension) change invalidates everything — its file fingerprint
-    * lives in the metadata line. Mutations run under the pending
-    * marker; a crash mid-refresh forces a full rebuild.
+    * Freshness: a `daymeta` manifest, a small text file the driver
+    * reads and writes, lists each input data file (path, length, mtime)
+    * and its per-day partial fingerprints ([[dayFingerprints]]). On
+    * ensure, only new or changed files are scanned; the partials of
+    * the rest are reused, and each day's fingerprint is the sum of its
+    * partials. Changed or new days are recomputed and swapped in via
+    * dynamic partition overwrite, days that vanished from the inputs
+    * are dropped, and untouched days are NOT rewritten (spec-asserted
+    * by file mtimes). A customer (dimension) change invalidates
+    * everything — its file fingerprint lives in the metadata line.
+    * Mutations run under the pending marker; a crash mid-refresh forces
+    * a full rebuild. A row with no day (null `ts`, `l_shipdate` or
+    * `doc_id`) fails the refresh: no day partition can hold it.
     */
   def ensureStoreDaily(spark: SparkSession, dir: String): String = {
     val root = dailyRoot(dir)
@@ -247,31 +286,74 @@ object KeyValue {
 
   private def dailyRoot(dir: String): String = s"${Artifact.root(dir)}/serving_daily"
 
-  /** First line of a small text file, `None` when it does not exist. */
-  private def readLine(spark: SparkSession, path: String): Option[String] = {
+  /** Lines of a small text file, `None` when it is not a file. */
+  private def readLines(spark: SparkSession, path: String): Option[Seq[String]] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
+    if (!fs.exists(p) || !fs.getFileStatus(p).isFile) None
     else {
-      val in = new java.io.BufferedReader(new java.io.InputStreamReader(fs.open(p)))
-      try Option(in.readLine()).map(_.trim) finally in.close()
+      val in = new java.io.BufferedReader(new java.io.InputStreamReader(fs.open(p), "UTF-8"))
+      try Some(Iterator.continually(in.readLine()).takeWhile(_ != null).toVector)
+      finally in.close()
+    }
+  }
+
+  /** First line of a small text file, `None` when it does not exist. */
+  private def readLine(spark: SparkSession, path: String): Option[String] =
+    readLines(spark, path).flatMap(_.headOption).map(_.trim)
+
+  private val ManifestHeader = "daymeta v1"
+
+  /** The `daymeta` manifest: `F` lines (input, path, length, mtime) and
+    * `P` lines (input, path, day, count, hash-sum), tab-separated.
+    * `None` when it is missing or not in this format.
+    */
+  private def readManifest(spark: SparkSession, path: String): Option[(Seq[DataFile], Seq[Partial])] =
+    readLines(spark, path).filter(_.headOption.contains(ManifestHeader)).map { lines =>
+      val rows = lines.tail.map(_.split('\t'))
+      (rows.collect { case Array("F", in, p, len, mt) => DataFile(in, p, len.toLong, mt.toLong) },
+        rows.collect { case Array("P", in, p, d, n, h) => Partial(in, p, d, n.toLong, h.toLong) })
+    }
+
+  /** Each day's fingerprint as the store's manifest records it; empty
+    * when there is no manifest.
+    */
+  private[graft] def manifestDays(spark: SparkSession, dir: String): Map[String, Map[String, (Long, Long)]] =
+    readManifest(spark, s"${dailyRoot(dir)}/daymeta").fold(Map.empty[String, Map[String, (Long, Long)]])(
+      m => dayTotals(m._2))
+
+  /** Write the manifest to a temp file, then rename it over the old one. */
+  private def writeManifest(spark: SparkSession, path: String,
+                            files: Seq[DataFile], partials: Seq[Partial]): Unit = {
+    val dst = new org.apache.hadoop.fs.Path(path)
+    val tmp = new org.apache.hadoop.fs.Path(s"$path.tmp")
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val text = (Seq(ManifestHeader) ++
+      files.map(f => s"F\t${f.input}\t${f.path}\t${f.len}\t${f.mtime}") ++
+      partials.map(p => s"P\t${p.input}\t${p.path}\t${p.d}\t${p.n}\t${p.h}"))
+      .mkString("", "\n", "\n")
+    val out = fs.create(tmp, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    // a v2 store's daymeta is a Parquet directory
+    if (fs.exists(dst) && fs.getFileStatus(dst).isDirectory) fs.delete(dst, true)
+    if (!fs.rename(tmp, dst)) {
+      fs.delete(dst, false)
+      if (!fs.rename(tmp, dst))
+        throw new java.io.IOException(s"could not rename $tmp to $dst")
     }
   }
 
   private def refreshDaily(spark: SparkSession, dir: String, root: String): String = {
     val storePath = s"$root/store"
-    // v2: the day fingerprint grew the corpus columns (media items) —
-    // the version bump rebuilds any v1 store instead of misreading its
-    // narrower daymeta schema
-    val metaLine = s"serving-daily v2 cust=${Artifact.fileFingerprint(spark, s"$dir/customer.parquet")}"
+    val manifestPath = s"$root/daymeta"
+    // v3: daymeta became a per-file text manifest — the version bump
+    // rebuilds a v2 store, whose daymeta is a Parquet table
+    val metaLine = s"serving-daily v3 cust=${Artifact.fileFingerprint(spark, s"$dir/customer.parquet")}"
 
-    // FILE-LEVEL fast path before any data scan: the per-day CONTENT
-    // fingerprints below cost three aggregation passes over the full
-    // fact/corpus tables — the right freshness check after a mutation,
-    // but 4+ s of every warm phase on an untouched fixture. If the
-    // source FILES are byte-level unchanged (same paths/sizes/mtimes —
-    // the same evidence ensureStore trusts), day contents cannot have
-    // changed and the store serves as-is.
+    // FILE-LEVEL fast path before any listing of data files: if the
+    // source FILES are byte-level unchanged since the last refresh
+    // (same paths/sizes/mtimes — the same evidence ensureStore trusts),
+    // day contents cannot have changed and the store serves as-is.
     val srcFpPath = new org.apache.hadoop.fs.Path(s"$root/srcmeta")
     val srcFs = srcFpPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val srcFp = Artifact.fileFingerprint(spark,
@@ -286,20 +368,29 @@ object KeyValue {
     // would be served as fresh and fail only at read time — and
     // writeSrcFp() at the bottom re-arms the fast path even on the
     // incremental branch, making the broken state sticky. Require both
-    // directories to still exist, else fall back to the fingerprint scan
-    // (whose full-rebuild branch recreates them).
+    // to still exist, else fall back to the manifest check (whose
+    // full-rebuild branch recreates them).
     if (!Artifact.hasPendingMutation(spark, root) &&
         Artifact.readMeta(spark, root).contains(metaLine) &&
         readLine(spark, srcFpPath.toString).contains(srcFp) &&
         srcFs.exists(new org.apache.hadoop.fs.Path(storePath)) &&
-        srcFs.exists(new org.apache.hadoop.fs.Path(s"$root/daymeta")))
+        srcFs.exists(new org.apache.hadoop.fs.Path(manifestPath)))
       return storePath
 
-    val current = dayFingerprints(spark, dir).collect()
-      .map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
-          r.getLong(5), r.getLong(6)))
-      .toMap
+    // scan only the files the manifest does not hold as they are now
+    val files = dataFiles(spark, dir)
+    val manifest = readManifest(spark, manifestPath)
+    val (storedFiles, storedPartials) = manifest.getOrElse((Nil, Nil))
+    val unchanged = storedFiles.toSet.intersect(files.toSet)
+    val kept = unchanged.map(f => (f.input, f.path))
+    val partials = storedPartials.filter(p => kept((p.input, p.path))) ++
+      dayFingerprints(spark, dir, files.filterNot(unchanged))
+    val noDay = partials.filter(_.d == null)
+    if (noDay.nonEmpty)
+      throw new IllegalStateException("serving inputs hold rows with no day, which no " +
+        "day partition can serve: " + noDay.groupBy(_.input).toSeq.sortBy(_._1)
+          .map { case (in, ps) => s"$in: ${ps.map(_.n).sum} row(s)" }.mkString(", "))
+    val current = dayTotals(partials)
 
     def writeAllDays(days: Seq[String]): Unit =
       servingTableForDays(spark, dir, days)
@@ -308,49 +399,42 @@ object KeyValue {
         .sortWithinPartitions(col("d"), col("pk"), col("sk"))
         .write.partitionBy("d")
         .mode("overwrite").parquet(storePath)
-    def writeDayMeta(): Unit =
-      spark.createDataFrame(current.toSeq.map {
-          case (d, (a, b, c2, e, f, g)) => (d, a, b, c2, e, f, g) })
-        .toDF("d", "ev_n", "ev_h", "li_n", "li_h", "doc_n", "doc_h")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/daymeta")
 
     if (Artifact.hasPendingMutation(spark, root) ||
         !Artifact.readMeta(spark, root).contains(metaLine) ||
         !srcFs.exists(new org.apache.hadoop.fs.Path(storePath)) ||
-        !srcFs.exists(new org.apache.hadoop.fs.Path(s"$root/daymeta"))) {
+        manifest.isEmpty) {
       // full (re)build: dimension changed, first build, crashed refresh,
-      // or a partially deleted root (the incremental branch below READS
-      // daymeta, so a missing directory must land here, not there)
+      // or a partially deleted root (the incremental branch below
+      // compares against the manifest, so a missing one must land here)
       writeAllDays(current.keys.toSeq.sorted)
-      writeDayMeta()
+      writeManifest(spark, manifestPath, files, partials)
       Artifact.endMutation(spark, root)
       Artifact.writeMeta(spark, root, metaLine)
     } else {
-      val stored = spark.read.parquet(s"$root/daymeta").collect()
-        .map(r => r.getString(0) ->
-          (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
-            r.getLong(5), r.getLong(6)))
-        .toMap
-      val changed = current.filter { case (d, fp) => stored.get(d) != Some(fp) }.keys.toSeq.sorted
+      val stored = dayTotals(storedPartials)
+      val changed = current.filter { case (d, fp) => !stored.get(d).contains(fp) }.keys.toSeq.sorted
       val removed = (stored.keySet -- current.keySet).toSeq.sorted
       if (changed.nonEmpty || removed.nonEmpty) {
         Artifact.beginMutation(spark, root)
         // A changed day whose recomputed output is EMPTY (e.g. every
         // event of the day drops out of the enrichment join) writes no
         // partition under dynamic overwrite — its stale directory must be
-        // deleted explicitly or the old items serve forever. One
-        // materialization of the (changed-days-only) output feeds both
-        // the write and the written-day set.
+        // deleted explicitly or the old items serve forever. The
+        // materializing job of the (changed-days-only) output also
+        // observes the set of days it wrote.
         val emptied = if (changed.isEmpty) Nil else {
+          val written = org.apache.spark.sql.Observation()
           val out = servingTableForDays(spark, dir, changed)
-            .withColumn("d", dayOf(col("pk"))).localCheckpoint()
+            .withColumn("d", dayOf(col("pk")))
+            .observe(written, collect_set(col("d")).as("days"))
+            .localCheckpoint()
           out.repartition(col("d"))
             .sortWithinPartitions(col("d"), col("pk"), col("sk"))
             .write.partitionBy("d").option("partitionOverwriteMode", "dynamic")
             .mode("overwrite").parquet(storePath)
-          val written = out.select(col("d")).distinct()
-            .collect().map(_.getString(0)).toSet
-          changed.filterNot(written)
+          val days = written.get("days").asInstanceOf[scala.collection.Seq[String]].toSet
+          changed.filterNot(days)
         }
         val stale = removed ++ emptied.filter(stored.contains)
         if (stale.nonEmpty) {
@@ -359,24 +443,35 @@ object KeyValue {
           stale.foreach(d =>
             fs.delete(new org.apache.hadoop.fs.Path(s"$storePath/d=$d"), true))
         }
-        writeDayMeta()
+        writeManifest(spark, manifestPath, files, partials)
         Artifact.endMutation(spark, root)
-      }
+      } else if (files.toSet != storedFiles.toSet)
+        // no day moved, but the file set did (a replayed batch re-lands
+        // byte-identical files with new mtimes): record it, so the next
+        // refresh does not scan them again
+        writeManifest(spark, manifestPath, files, partials)
     }
     writeSrcFp() // the file-level fast path re-arms after any outcome
     storePath
   }
 
+  /** The columns of a serving store at rest: read with this schema, a
+    * store load runs no schema-inference job.
+    */
+  private val StoreSchema: StructType = StructType(
+    Seq("pk", "sk", "value", "record_type").map(StructField(_, StringType)))
+
   /** Read side of [[ensureStoreDaily]]: the serving columns, day
     * partitions dropped (`d` is layout, not data).
     */
   def loadDailyStore(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(ensureStoreDaily(spark, dir))
+    spark.read.schema(StoreSchema.add("d", StringType)).parquet(ensureStoreDaily(spark, dir))
       .select(col("pk"), col("sk"), col("value"), col("record_type"))
 
   /** [[loadDailyStore]] with load-once semantics per session, like
-    * [[servingTableCached]]: the freshness check (two narrow per-day
-    * fingerprint scans) and the partition-directory listing run once,
+    * [[servingTableCached]]: the freshness check (a file listing, plus
+    * a scan of any new or changed input file) and the
+    * partition-directory listing run once,
     * not per query — the day layout means MANY directories, and
     * re-listing them per lookup would dominate serve cost. The cache
     * version is the store's committed source fingerprint (`srcmeta`,
@@ -422,5 +517,5 @@ object KeyValue {
     */
   def servingTableCached(spark: SparkSession, dir: String): DataFrame =
     persisted(spark, s"store#$dir", storeSourcesFingerprint(spark, dir), storeRoot(dir))(
-      spark.read.parquet(ensureStore(spark, dir)))
+      spark.read.schema(StoreSchema).parquet(ensureStore(spark, dir)))
 }

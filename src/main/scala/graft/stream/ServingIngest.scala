@@ -3,6 +3,7 @@ package graft.stream
 import graft.serve.KeyValue
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The reference's transform→load chain as ONE streaming application:
@@ -21,9 +22,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    batch-id-derived file names, so a REPLAYED batch first clears
   *    its own (possibly partial) previous file set and re-lands
   *    byte-identical — the fact table never double-counts;
-  *  - [[graft.serve.KeyValue.ensureStoreDaily]] re-derives only days
-  *    whose input fingerprint changed, so a replayed no-op append
-  *    leaves the store physically untouched.
+  *  - [[graft.serve.KeyValue.ensureStoreDaily]] fingerprints only the
+  *    data files its manifest does not already hold (a batch's own
+  *    files) and re-derives only days whose summed fingerprint changed,
+  *    so a replayed no-op append leaves the store physically untouched.
   *
   * Single-writer by contract (the reference's scheduler serializes
   * runs the same way); readers racing a mid-commit batch can see a
@@ -44,21 +46,29 @@ object ServingIngest {
     * rename is the per-file atomic commit, and the batch-id prefix is
     * what makes a checkpoint replay idempotent instead of additive.
     * The batch must carry the table's on-disk schema (it is read back
-    * through [[graft.Tables.events]] like any other part file).
+    * through [[graft.Tables.events]] like any other part file). A
+    * batch with a null `ts` is rejected: no day partition of the
+    * serving store could hold the event. The check rides the staging
+    * write (no extra job); a failed write leaves the table untouched
+    * and removes its staging directory.
     */
   def appendEvents(spark: SparkSession, dir: String, batch: DataFrame,
                    batchId: Long): Unit = {
     val eventsDir = new Path(s"$dir/events.parquet")
     val fs = eventsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = new Path(s"$dir/_staging_events_b$batchId")
+    fs.delete(staging, true)
+    try batch.withColumn("ts", when(col("ts").isNull, raise_error(lit(
+        s"batch $batchId holds an event with a null ts, which no day of the " +
+          "serving store can hold"))).otherwise(col("ts")))
+      .write.mode("overwrite").parquet(staging.toString)
+    catch { case e: Throwable => fs.delete(staging, true); throw e }
     if (fs.getFileStatus(eventsDir).isFile) {
       val tmp = new Path(s"$dir/events.parquet.promoting")
       fs.rename(eventsDir, tmp)
       fs.mkdirs(eventsDir)
       fs.rename(tmp, new Path(eventsDir, "part-00000-base.parquet"))
     }
-    val staging = new Path(s"$dir/_staging_events_b$batchId")
-    fs.delete(staging, true)
-    batch.write.mode("overwrite").parquet(staging.toString)
     val prefix = s"ingest-b$batchId-"
     fs.listStatus(eventsDir).iterator
       .filter(_.getPath.getName.startsWith(prefix))

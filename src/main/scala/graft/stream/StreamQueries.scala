@@ -247,19 +247,10 @@ object StreamQueries {
     * normalized inside the stream like the batch path does; the
     * pathGlobFilter is the S6-style name predicate.
     */
-  // Parquet footer schema, read once per (file, mtime): a fixture
-  // regenerated within one application re-reads instead of serving a
-  // stale schema.
-  private def rawSchema(s: SparkSession, path: String): org.apache.spark.sql.types.StructType =
-    ArtifactCache.get(s.sparkContext, s"schema#$path",
-        new java.io.File(path).lastModified.toString) {
-      ArtifactCache.Entry(s.read.parquet(path).schema)
-    }
-
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
     // stream_dedup_counts opens two source instances of the same path
     val src = new java.io.File(s"$d/events.parquet")
-    val schema = rawSchema(s, src.getPath)
+    val schema = Tables.schema(s, src.getPath)
     // layout seam: the driver fixture ships events.parquet as a single
     // FILE in the table dir (the S6 name-predicate shape — glob-filter
     // the directory), but a written table (ScaleUp's scale fixtures,
@@ -281,7 +272,7 @@ object StreamQueries {
     */
   private def documentsStream(s: SparkSession, d: String): DataFrame = {
     val src = new java.io.File(s"$d/documents.parquet")
-    val schema = rawSchema(s, src.getPath)
+    val schema = Tables.schema(s, src.getPath)
     val cfg =
       if (src.isDirectory)
         FileSourceConfig(s"$d/documents.parquet", "parquet", schema)

@@ -49,7 +49,10 @@ class MaintenanceSpec extends SparkSuite {
       "bucketed" -> "overwrite-only bucketed tables: file set = bucket count, no append path",
       "lrclass" -> ("overwrite-only learned model (coalesce(1) weights + bias, " +
         "2 files total): GD weights are not additive statistics, so there is no " +
-        "append path to fragment — a changed seed rebuilds wholesale (LrClassifier doc)"))
+        "append path to fragment — a changed seed rebuilds wholesale (LrClassifier doc)"),
+      "bpe_m8" -> ("overwrite-only tokenizer (merge list + final segmentation): the " +
+        "merge chain of global argmaxes admits no append, so any corpus change " +
+        "retrains it in full (Bpe.trained doc)"))
     val swept = Maintenance.compactAll(spark, sfDir).map(_._1).toSet
     def kindsOn(root: String): Seq[String] =
       Option(new java.io.File(root).listFiles()).getOrElse(Array.empty[java.io.File])

@@ -19,4 +19,22 @@ abstract class SparkSuite extends AnyFunSuite {
     * shared tables, and cleanup must not reach through them).
     */
   def deleteRecursively(path: String): Unit = Fs.deleteTree(path)
+
+  /** `body`'s result and the Spark jobs started while it ran, counted
+    * by a listener that is removed before this returns.
+    */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graftbridge.bridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.sql.graftbridge.bridge.drainListenerBus(spark)
+      (r, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

@@ -22,14 +22,15 @@ class KeyValueDailySpec extends SparkSuite {
     * of it would legitimately force a full store rebuild.
     */
   private def writeEvents(extraDay2: Boolean = false, dropDay3: Boolean = false,
-                          orphanDay3: Boolean = false): Unit = {
+                          orphanDay3: Boolean = false, nullTs: Boolean = false): Unit = {
     val base = for {
       day <- 1 to (if (dropDay3) 2 else 3); h <- 1 to 4
       // orphanDay3 re-points day 3 at a user that doesn't exist — the
       // enrichment inner join then drops the whole day
     } yield (if (h % 2 == 0) "click" else "play", ts(day, h),
       if (orphanDay3 && day == 3) 99L else (h % 2) + 1L, h * 1.5)
-    val events = base ++ (if (extraDay2) Seq(("click", ts(2, 9), 1L, 9.0)) else Nil)
+    val events = base ++ (if (extraDay2) Seq(("click", ts(2, 9), 1L, 9.0)) else Nil) ++
+      (if (nullTs) Seq(("play", null, 1L, 2.0)) else Nil)
     events.toDF("event_type", "ts", "user_id", "value")
       .repartition(1).write.mode("overwrite").parquet(s"$fixture/events.parquet")
   }
@@ -166,6 +167,55 @@ class KeyValueDailySpec extends SparkSuite {
     assert(relabeled.exists(_._1.startsWith("MEDIA#fr#DATE#2024-01-02")) &&
       !relabeled.exists(_._1.startsWith("MEDIA#en#DATE#2024-01-02")),
       s"the relabeled day must serve the new lang: ${relabeled.map(_._1)}")
+  }
+
+  /** The manifest's bookkeeping: after each kind of file change, its
+    * per-day sums equal a fingerprint scan over all files.
+    */
+  test("daily store: manifest day sums equal a full fingerprint scan through appends, a replay, an overwrite and a deleted file") {
+    deleteRecursively(fixture); deleteRecursively(root)
+    writeFixture()
+    def refreshed(): Unit = {
+      KeyValue.ensureStoreDaily(spark, fixture)
+      val full = KeyValue.dayTotals(KeyValue.dayFingerprints(spark, fixture,
+        KeyValue.dataFiles(spark, fixture)))
+      assert(KeyValue.manifestDays(spark, fixture) == full)
+    }
+    def batch(day: Int, v: Double) =
+      Seq(("play", ts(day, 7), 1L, v)).toDF("event_type", "ts", "user_id", "value")
+    refreshed()
+    graft.stream.ServingIngest.appendEvents(spark, fixture, batch(2, 2.0), 0L)
+    refreshed()
+    graft.stream.ServingIngest.appendEvents(spark, fixture, batch(4, 3.0), 1L)
+    refreshed()
+    // a replayed batch re-lands byte-identical files with new mtimes:
+    // the manifest takes the new file set, no day is rewritten
+    val days = (1 to 4).map(partMtime)
+    Thread.sleep(20)
+    graft.stream.ServingIngest.appendEvents(spark, fixture, batch(4, 3.0), 1L)
+    refreshed()
+    assert((1 to 4).map(partMtime) == days, "a replay must not rewrite any day")
+    writeEvents(extraDay2 = true)
+    refreshed()
+    graft.stream.ServingIngest.appendEvents(spark, fixture, batch(3, 5.0), 2L)
+    refreshed()
+    new java.io.File(s"$fixture/events.parquet").listFiles()
+      .filter(_.getName.startsWith("ingest-b2-")).foreach(_.delete())
+    refreshed()
+    assert(storeRows() == fullRebuildRows())
+  }
+
+  test("daily store: a row with no day fails the refresh, naming the input and the row count") {
+    deleteRecursively(fixture); deleteRecursively(root)
+    writeFixture()
+    KeyValue.ensureStoreDaily(spark, fixture)
+    writeEvents(nullTs = true)
+    val incremental = intercept[IllegalStateException](KeyValue.ensureStoreDaily(spark, fixture))
+    assert(incremental.getMessage.contains("events: 1 row"), incremental.getMessage)
+    // a dimension change takes the full-rebuild branch: the same error
+    writeCustomer(rename = true)
+    val rebuild = intercept[IllegalStateException](KeyValue.ensureStoreDaily(spark, fixture))
+    assert(rebuild.getMessage.contains("events: 1 row"), rebuild.getMessage)
   }
 
   test("daily store: day partitions prune lookups, rows sorted by (pk, sk) within a day") {

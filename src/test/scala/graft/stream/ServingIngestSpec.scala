@@ -6,6 +6,9 @@ import graft.serve.KeyValue
 import java.io.File
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -129,6 +132,67 @@ class ServingIngestSpec extends SparkSuite {
     assert(dayDirs(store) == state, "identical replayed content must not refresh any day")
     assert(storeRows(KeyValue.loadDailyStore(spark, fix)) == rowsAfterFirst,
       "no double-counting under batch replay")
+  }
+
+  test("a batch with a null ts is rejected and leaves the table untouched") {
+    setUp()
+    val events = new File(s"$fix/events.parquet")
+    val before = events.lastModified
+    val bad = Seq(ev(5001L, "2024-01-03", 1L, "play", 1.0),
+      ev(5002L, "2024-01-03", 1L, "play", 2.0).copy(ts = null)).toDF()
+    val e = intercept[Exception](ServingIngest.appendEvents(spark, fix, bad, batchId = 5L))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("null ts")), messages.mkString("\n"))
+    assert(events.isFile && events.lastModified == before, "the table must be untouched")
+    assert(!new File(s"$fix/_staging_events_b5").exists, "nothing may stay staged")
+  }
+
+  /** The benchmark's refresh shape: music tables only, a file-source
+    * stream over a spool directory, a store already refreshed once,
+    * then one landed batch.
+    */
+  test("a warm streamed refresh fingerprints only its batch's files, in at most 16 jobs") {
+    setUp()
+    Files.delete(Paths.get(fix, "documents.parquet"))
+    KeyValue.ensureStoreDaily(spark, fix)
+    val spool = s"$base/spool_warm"
+    def land(rows: Seq[EventRow]): Unit =
+      rows.toDF().coalesce(1).write.mode("append").parquet(spool)
+    land(Seq(ev(6001L, "2024-01-05", 0L, "view", 2.5)))
+    val schema = spark.read.parquet(spool).schema
+    def refresh(): Unit =
+      ServingIngest.start(spark, FileSourceConfig(spool, "parquet", schema),
+        s"$base/ckpt_warm", fix).awaitTermination()
+    refresh()
+    land(Seq(ev(6002L, "2024-02-01", 2L, "click", 1.75)))
+
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    session.listenerManager.register(listener)
+    val jobs =
+      try jobsDuring(refresh())._2
+      finally session.listenerManager.unregister(listener)
+    assert(jobs <= 16, s"a warm streamed refresh ran $jobs jobs")
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case f: FileSourceScanExec => Seq(f)
+      case _ => p.children.flatMap(scans)
+    }
+    val fingerprinted = plans.asScala.toSeq
+      .filter(_.toString.contains("input_file_name"))
+      .flatMap(scans).flatMap(_.relation.location.inputFiles)
+    assert(fingerprinted.nonEmpty, "the refresh must fingerprint the batch")
+    assert(fingerprinted.forall(_.contains("/events.parquet/ingest-b1-")),
+      s"the fingerprint scan must read only the batch's files: $fingerprinted")
+    assert(storeRows(KeyValue.loadDailyStore(spark, fix)) ==
+      storeRows(KeyValue.servingTable(spark, fix)))
   }
 
   test("lookups racing a streamed refresh never fail and the store ends exact") {
