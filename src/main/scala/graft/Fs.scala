@@ -8,8 +8,8 @@ object Fs {
 
   /** Recursive delete that never follows symlinks: a link is removed as
     * a link, its target untouched. The benchmark fixtures symlink shared
-    * source tables (e.g. `ServeScale` links `customer.parquet` into its
-    * work dir) — a follow-links delete (java.io listFiles traverses
+    * source tables (e.g. the `serve_refresh` probe links `customer.parquet`
+    * into its work dir) — a follow-links delete (java.io listFiles traverses
     * symlinked directories) would silently destroy the shared fixture on
     * the second run.
     */

@@ -23,10 +23,11 @@ import scala.jdk.CollectionConverters._
   *  - execute: the count.
   *
   * Jobs, stages, tasks, task I/O, the named SQL actions besides the
-  * count, and every stream trigger come from one SparkListener on the
-  * context, added for the call and removed before it returns. A
-  * session's StreamingQueryListener or QueryExecutionListener would not
-  * do: each hears only its own session, streams run on cloned sessions
+  * count, each probe [[step]] and every stream trigger come from one
+  * SparkListener on the context, added for the call and removed before
+  * it returns, also when a name throws. A session's
+  * StreamingQueryListener or QueryExecutionListener would not do: each
+  * hears only its own session, streams run on cloned sessions
   * (`StreamQueries.streamSession`), and a session cloned while a
   * QueryExecutionListener is registered keeps a copy of it. Nothing
   * else should run on the context during a call.
@@ -76,7 +77,7 @@ object Profile {
     private val jobStart = mutable.LinkedHashMap.empty[Int, Long]
     private val jobEnd = mutable.Map.empty[Int, Long]
     private var stages, tasks, input, shuffleRead, shuffleWrite, spill = 0L
-    private val actions = mutable.ArrayBuffer.empty[(String, Double, QueryExecution)]
+    private val actions = mutable.ArrayBuffer.empty[(String, Double, Option[QueryExecution])]
     private val triggers = mutable.ArrayBuffer.empty[Trigger]
 
     override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -101,7 +102,8 @@ object Profile {
           triggers += Trigger(p.batchId, p.numInputRows,
             p.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap,
             p.stateOperators.map(_.numRowsTotal).sum)
-        case _ => actions ++= bridge.actionEnd(e)
+        case Step(n, s) => actions += ((n, s, None))
+        case _ => actions ++= bridge.actionEnd(e).map { case (n, s, qe) => (n, s, Some(qe)) }
       }
     }
 
@@ -117,20 +119,38 @@ object Profile {
       Run(name, run, rows, wallS, construct, analyze, optimize, execute,
         jobStart.toSeq.map { case (id, t) => jobEnd.get(id).fold(-1.0)(end => (end - t) / 1e3) },
         stages, tasks, input, shuffleRead, shuffleWrite, spill,
-        actions.collect { case (n, s, qe) if qe ne counted => (n, s) }.toSeq,
+        actions.collect { case (n, s, qe) if !qe.contains(counted) => (n, s) }.toSeq,
         triggers.toSeq)
     }
+  }
+
+  /** One step of a probe, as [[step]] reports it. */
+  private final case class Step(name: String, s: Double) extends SparkListenerEvent
+
+  /** Runs `body` and files its wall time under `name` in the current
+    * run's `actions`: a probe's per-step walls
+    * ([[ProbeAb.probes]]). Outside [[run]] nothing records it.
+    */
+  def step[T](name: String)(body: => T): T = {
+    val t0 = System.nanoTime()
+    val result = body
+    bridge.post(SparkSession.active, Step(name, (System.nanoTime() - t0) / 1e9))
+    result
   }
 
   private def lookup(name: String): (SparkSession, String) => DataFrame =
     SparkEntry.queries.get(name).orElse(ProbeAb.probes.get(name))
       .getOrElse(throw new NoSuchElementException(s"no query or probe named $name"))
 
-  def run(spark: SparkSession, sfDir: String, names: Seq[String]): Seq[Run] = {
+  def run(spark: SparkSession, sfDir: String, names: Seq[String]): Seq[Run] =
+    runQueries(spark, sfDir, names.map(name => name -> lookup(name)))
+
+  /** [[run]] over named query functions. */
+  private[graft] def runQueries(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[Run] = {
     val rec = new Recorder
     spark.sparkContext.addSparkListener(rec)
-    try names.flatMap { name =>
-      val query = lookup(name)
+    try queries.flatMap { case (name, query) =>
       (1 to 3).map { i =>
         bridge.drainListenerBus(spark)
         rec.reset()

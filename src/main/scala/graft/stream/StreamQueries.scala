@@ -459,7 +459,7 @@ object StreamQueries {
     // as a `(doc_id, media)` parquet stream (the landing-zone shape:
     // small media compacted into container files; the per-doc `.bin`
     // file-stream variant measured 8.6 s of source-log bookkeeping
-    // alone at sf0.1 vs this path's sub-second — priced in ProbeAb),
+    // alone at sf0.1 vs this path's sub-second, SCALING.md),
     // each payload decoded with the REAL P6 parse inside the
     // micro-batch (pure map, no state), malformed arrivals quarantined
     // into a width=−1 bucket instead of failing the stream (the P7

@@ -61,6 +61,10 @@ object bridge {
     else Some(plan.canonicalized.toString)
   }
 
+  /** Posts `e` on the context's listener bus, to every listener. */
+  def post(spark: SparkSession, e: SparkListenerEvent): Unit =
+    spark.sparkContext.listenerBus.post(e)
+
   /** Blocks until every listener has handled every event posted so far. */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()

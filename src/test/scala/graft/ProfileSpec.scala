@@ -10,18 +10,23 @@ import org.json4s.jackson.JsonMethods
 class ProfileSpec extends SparkSuite {
   private val sf = new java.io.File(sfDir).getParent + "/sf0.01"
 
-  /** Runs `names` and checks that every listener of the session is
+  /** Runs `body` and checks that every listener of the session is
     * still there afterwards and none of the engine's own was left
-    * behind (Spark registers its own as sessions are cloned).
+    * behind (Spark registers its own as sessions are cloned), also
+    * when `body` throws.
     */
-  private def profile(names: String*): Seq[Profile.Run] = {
+  private def leavesNoListener[T](body: => T): T = {
     val before = listeners.of(spark)
-    val runs = Profile.run(spark, sf, names)
-    val after = listeners.of(spark)
-    assert(before.forall(l => after.exists(_ eq l)))
-    assert(!after.exists(_.getClass.getName.startsWith("graft.")), after)
-    runs
+    try body
+    finally {
+      val after = listeners.of(spark)
+      assert(before.forall(l => after.exists(_ eq l)))
+      assert(!after.exists(_.getClass.getName.startsWith("graft.")), after)
+    }
   }
+
+  private def profile(names: String*): Seq[Profile.Run] =
+    leavesNoListener(Profile.run(spark, sf, names))
 
   test("a batch query: rows of forceAndCount, tasks, phases that add up to the wall time") {
     val runs = profile("a1_genre_kpis")
@@ -46,5 +51,26 @@ class ProfileSpec extends SparkSuite {
       assert(r.triggers.exists(t => t.durationMs.contains("triggerExecution")), r.json)
       assert(r.triggers.map(_.numInputRows).sum > 0, r.json)
     }
+  }
+
+  test("a lifecycle probe reports each step as a named action, and rows 0 for a pass") {
+    val steps = Seq("build", "append_batch", "remove_batch", "compact")
+    profile("index_lifecycle").foreach { r =>
+      assert(r.rows == 0, r.json)
+      assert(r.actions.map(_._1).filter(steps.contains) == steps, r.json)
+      assert(r.actions.forall(_._2 >= 0), r.json)
+    }
+  }
+
+  test("a failing check inside a probe propagates out of Profile.run") {
+    val broken: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
+      (s, _) => {
+        Profile.step("checked")(require(false, "append+remove must round-trip"))
+        s.emptyDataFrame
+      }
+    val e = intercept[IllegalArgumentException] {
+      leavesNoListener(Profile.runQueries(spark, sf, Seq("broken" -> broken)))
+    }
+    assert(e.getMessage.contains("append+remove must round-trip"))
   }
 }
