@@ -1,6 +1,6 @@
 package graft
 
-import graft.ext.{AnnIndex, Artifact, Dedup}
+import graft.ext.{AnnIndex, Artifact, BigramModel, Classifier, Dedup, InvertedIndex, LanguageModel}
 import org.apache.spark.sql.SparkSession
 
 /** One housekeeping entry point for every persisted artifact of a
@@ -41,30 +41,18 @@ object Maintenance {
     run("shards", s"$root/shards", "shards v2 ") {
       graft.ext.TrainingSet.compactShards(spark, s"$root/shards")
     }
-    run("unigram_lm", s"$root/unigram_lm", graft.ext.LanguageModel.MetaPrefix) {
-      graft.ext.LanguageModel.compactLm(spark, s"$root/unigram_lm")
-    }
-    run("unigram_lm_target", s"$root/unigram_lm_target",
-        graft.ext.LanguageModel.MetaPrefix) {
-      graft.ext.LanguageModel.compactLm(spark, s"$root/unigram_lm_target")
-    }
-    run("unigram_lm_seed", s"$root/unigram_lm_seed",
-        graft.ext.LanguageModel.MetaPrefix) {
-      graft.ext.LanguageModel.compactLm(spark, s"$root/unigram_lm_seed")
-    }
     // the streamed curated-corpus root: band index + corpus store file
     // sets, swept through the ingest layer's own maintainer
     run("stream_curated", s"$root/stream_curated", "ingest v1 ") {
       graft.stream.IncrementalIngest.maintain(spark, s"$root/stream_curated")
     }
-    run("nbclass", s"$root/nbclass", graft.ext.Classifier.MetaPrefix) {
-      graft.ext.Classifier.compactNb(spark, s"$root/nbclass")
-    }
-    run("bigram_lm", s"$root/bigram_lm", graft.ext.BigramModel.MetaPrefix) {
-      graft.ext.BigramModel.compactLm2(spark, s"$root/bigram_lm")
-    }
-    run("invindex", s"$root/invindex", graft.ext.InvertedIndex.MetaPrefix) {
-      graft.ext.InvertedIndex.compactIndex(spark, s"$root/invindex")
+    // the document ledgers: per-key deltas merged, masked id rows
+    // dropped, tombstones cleared
+    Seq("unigram_lm" -> LanguageModel.ledger, "unigram_lm_target" -> LanguageModel.ledger,
+        "unigram_lm_seed" -> LanguageModel.ledger, "nbclass" -> Classifier.ledger,
+        "bigram_lm" -> BigramModel.ledger, "invindex" -> InvertedIndex.ledger).foreach {
+      case (name, ledger) =>
+        run(name, s"$root/$name", ledger.kind)(ledger.compact(spark, s"$root/$name"))
     }
     // containment index twins (full corpus + the %10≠0 incremental
     // slice): shingle map re-merged to one live row per shingle, docs

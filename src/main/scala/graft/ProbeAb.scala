@@ -76,10 +76,10 @@ object ProbeAb {
       val batch = syntheticBatch(s, "appended index row tokens ")
       Fs.deleteTree(dir)
       step("build")(InvertedIndex.ensureIndex(s, docs, dir))
-      step("append_batch")(InvertedIndex.appendIndex(s, batch, dir))
-      step("remove_batch")(InvertedIndex.removeIndex(s, batch, dir))
+      step("append_batch")(InvertedIndex.ledger.append(s, batch, dir))
+      step("remove_batch")(InvertedIndex.ledger.remove(s, batch, dir))
       requireRoundTrip(s, dir)(InvertedIndex.ensureIndex(s, docs, dir))
-      step("compact")(InvertedIndex.compactIndex(s, dir))
+      step("compact")(InvertedIndex.ledger.compact(s, dir))
       s.emptyDataFrame
     }),
     // the unigram and bigram models' lifecycles, then SemDeDup pair
@@ -92,15 +92,15 @@ object ProbeAb {
       Fs.deleteTree(lmDir)
       step("build")(LanguageModel.ensureLm(s, docs, lmDir))
       step("score")(GraftSession.forceAndCount(LanguageModel.score(s, docs, lmDir)))
-      step("append_batch")(LanguageModel.appendLm(s, batch, lmDir))
-      step("remove_batch")(LanguageModel.removeLm(s, batch, lmDir))
+      step("append_batch")(LanguageModel.ledger.append(s, batch, lmDir))
+      step("remove_batch")(LanguageModel.ledger.remove(s, batch, lmDir))
       requireRoundTrip(s, lmDir)(LanguageModel.ensureLm(s, docs, lmDir))
       val lm2Dir = s"${Artifact.root(d)}/bigram_lm"
       Fs.deleteTree(lm2Dir)
       step("lm2_build")(BigramModel.ensureLm2(s, docs, lm2Dir))
       step("lm2_score")(GraftSession.forceAndCount(BigramModel.score2(s, docs, lm2Dir)))
-      step("lm2_append_batch")(BigramModel.appendLm2(s, batch, lm2Dir))
-      step("lm2_remove_batch")(BigramModel.removeLm2(s, batch, lm2Dir))
+      step("lm2_append_batch")(BigramModel.ledger.append(s, batch, lm2Dir))
+      step("lm2_remove_batch")(BigramModel.ledger.remove(s, batch, lm2Dir))
       requireRoundTrip(s, lm2Dir)(BigramModel.ensureLm2(s, docs, lm2Dir))
       val emb = Tables.embeddings(s, d)
       val cells = math.max(16, math.round(emb.count().toDouble / SemanticCellSize).toInt)

@@ -245,8 +245,9 @@ private[graft] object Artifact {
     ArtifactCache.locked(new Path(dir).toString)(body)
 
   // ------------------- generation ledger + logical deletion (shared
-  // by the band index and the unigram LM: any append-mode artifact
-  // whose rows belong to documents and must support removal)
+  // by every append-mode artifact whose rows belong to documents and
+  // must support removal: the band and containment indexes, the media
+  // feature store and each [[DocLedger]])
 
   private def genPath(spark: SparkSession, dir: String): (FileSystem, Path) =
     fsPath(spark, dir, "genct.txt")
@@ -384,5 +385,141 @@ private[graft] object Artifact {
     assert(readMeta(spark, dir) == metaBefore,
       "compaction must not touch the metadata line")
     (before, parquetFiles(dataPath))
+  }
+
+  // ------------------------------------------- doc-keyed delta ledger
+
+  /** One additive table of a [[DocLedger]], stored under `sub`:
+    * `delta` turns a document frame into its rows — the `keys`, the
+    * summed `value` and any `partitionBy` columns. It also gets the
+    * artifact's metadata line, for a layout that is a build parameter
+    * (the inverted index's bucket count). Removal negates `value`;
+    * readers net per key and keep `value > 0`.
+    */
+  final case class Additive(sub: String, delta: (DataFrame, String) => DataFrame,
+                            keys: Seq[String], value: String,
+                            partitionBy: Seq[String] = Nil) {
+    private[Artifact] def write(rows: DataFrame, mode: String, dir: String): Unit = {
+      val w = rows.write.mode(mode)
+      (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*)).parquet(s"$dir/$sub")
+    }
+
+    /** Per-key deltas merged back to one row, non-positive nets dropped
+      * — consumer-equivalent, because every reader nets and filters.
+      */
+    private[Artifact] def merge(df: DataFrame): DataFrame =
+      df.groupBy((partitionBy ++ keys).map(col): _*).agg(sum(col(value)).as(value))
+        .filter(col(value) > 0)
+        .select((keys ++ Seq(value) ++ partitionBy).map(col): _*)
+  }
+
+  /** The lifecycle of an artifact made of document-keyed additive
+    * tables: build once per corpus fingerprint, append in O(batch),
+    * remove in O(removed), compact. Documents are `docCols` (which the
+    * fingerprint hashes), and `ids/` holds one `idRow ++ gen` row per
+    * indexed document. Every table is additive, so each mutation is
+    * delta writes plus an arithmetic fingerprint update — history is
+    * never recounted, and a later [[ensure]] over the mutated corpus
+    * serves without a rebuild:
+    *  - append is idempotent via the live ids (a double-submitted batch
+    *    is a no-op) and fails fast on intra-batch duplicate ids; a
+    *    removed id is re-insertable, its new gen clearing the mask;
+    *  - remove writes NEGATIVE deltas recounted from the removed texts
+    *    (the caller passes the indexed docs), only for live ids — a
+    *    retried removal is a no-op — and tombstones the ids at next-gen;
+    *  - both run under the pending marker, so a crash leaves an
+    *    artifact that [[requireKind]] refuses and [[Artifact.ensure]]
+    *    rebuilds;
+    *  - compaction merges each table by its keys, drops masked id rows
+    *    and clears the tombstones. Metadata untouched.
+    */
+  final case class DocLedger(kind: String, docCols: Seq[String], idRow: Seq[Column],
+                             tables: Seq[Additive]) {
+
+    private def fp(docs: DataFrame): String = fingerprint(docs, docCols.map(col): _*)
+
+    private def writeIds(docs: DataFrame, gen: Long, mode: String, dir: String): Unit =
+      docs.select(idRow :+ lit(gen).as("gen"): _*).write.mode(mode).parquet(s"$dir/ids")
+
+    /** The id rows with logical deletes applied — "indexed" for the
+      * append anti-join and the removal semi-join.
+      */
+    def liveIds(spark: SparkSession, dir: String): DataFrame =
+      maskTombstones(spark, dir, spark.read.parquet(s"$dir/ids"))
+
+    /** Build-if-needed over `docs` under the meta line
+      * `kind + params + " fp=" + fingerprint`: every table and the gen-0
+      * ids are overwritten, the tombstones cleared, next-gen set to 1.
+      * Returns the artifact dir.
+      */
+    def ensure(spark: SparkSession, docs: DataFrame, dir: String, params: String): String = {
+      val meta = s"$kind$params fp=${fp(docs)}"
+      Artifact.ensure(spark, dir, meta) {
+        tables.foreach(t => t.write(t.delta(docs, meta), "overwrite", dir))
+        writeIds(docs, 0L, "overwrite", dir)
+        clearTombstones(spark, dir)
+        writeNextGen(spark, dir, 1L)
+      }
+    }
+
+    def append(spark: SparkSession, batch: DataFrame, dir: String): Unit = {
+      requireKind(spark, dir, kind)
+      DocLedger.requireUniqueIds(batch, s"'${kind.trim}' append batch")
+      val meta = readMeta(spark, dir).get
+      val fresh = batch
+        .join(broadcast(batch.select(col("doc_id"))
+            .join(liveIds(spark, dir).select(col("doc_id")), Seq("doc_id"), "left_semi")),
+          Seq("doc_id"), "left_anti")
+        .select(docCols.map(col): _*).localCheckpoint()
+      if (!fresh.isEmpty) {
+        val gen = readNextGen(spark, dir)
+        beginMutation(spark, dir)
+        tables.foreach(t => t.write(t.delta(fresh, meta), "append", dir))
+        writeIds(fresh, gen, "append", dir)
+        writeNextGen(spark, dir, gen + 1L)
+        addToFingerprint(spark, dir, kind, fp(fresh))
+        endMutation(spark, dir)
+      }
+    }
+
+    def remove(spark: SparkSession, removedDocs: DataFrame, dir: String): Unit = {
+      requireKind(spark, dir, kind)
+      val meta = readMeta(spark, dir).get
+      val removed = removedDocs.select(docCols.map(col): _*)
+        .join(broadcast(removedDocs.select(col("doc_id"))
+            .join(liveIds(spark, dir).select(col("doc_id")), Seq("doc_id"), "left_semi")),
+          Seq("doc_id"), "left_semi")
+        .localCheckpoint()
+      if (!removed.isEmpty) {
+        beginMutation(spark, dir)
+        tables.foreach(t =>
+          t.write(t.delta(removed, meta).withColumn(t.value, -col(t.value)), "append", dir))
+        val tgen = readNextGen(spark, dir)
+        appendTombstones(spark, dir, removed.select(col("doc_id"), lit(tgen).as("tgen")))
+        subtractFromFingerprint(spark, dir, kind, fp(removed))
+        endMutation(spark, dir)
+      }
+    }
+
+    /** Returns (parquet files before, after) over every table and the ids. */
+    def compact(spark: SparkSession, dir: String): (Int, Int) = {
+      val files = tables.map(t => compactParquet(spark, dir, t.sub,
+        partitionCols = t.partitionBy, merge = t.merge)) :+
+        compactParquet(spark, dir, "ids", merge = maskTombstones(spark, dir, _))
+      clearTombstones(spark, dir)
+      (files.map(_._1).sum, files.map(_._2).sum)
+    }
+  }
+
+  object DocLedger {
+
+    /** Fail fast on a batch that repeats a doc_id: the idempotency
+      * anti-join only sees STORED ids, so a repeat would count twice in
+      * the ledgers and in the additive fingerprint.
+      */
+    def requireUniqueIds(batch: DataFrame, what: String): Unit =
+      if (batch.groupBy(col("doc_id")).count().filter(col("count") > 1).take(1).nonEmpty)
+        throw new IllegalArgumentException(
+          s"$what contains duplicate doc_ids — dedupe upstream first")
   }
 }

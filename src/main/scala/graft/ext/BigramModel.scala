@@ -60,103 +60,20 @@ object BigramModel {
       .select(col("bg.prev").as("prev"), col("bg.cur").as("cur"))
       .groupBy(col("prev"), col("cur")).agg(count(lit(1)).as("c"))
 
-  /** Build-if-needed bigram model over the corpus: both count ledgers
-    * plus the gen-stamped id ledger, guarded by the corpus content
-    * fingerprint. Returns the artifact dir.
+  /** The model's lifecycle ([[Artifact.DocLedger]]): the unigram
+    * `counts/` and bigram `counts2/` ledgers plus the gen-stamped id
+    * ledger over `(doc_id, text)`.
+    */
+  private[graft] val ledger = Artifact.DocLedger(MetaPrefix, Seq("doc_id", "text"),
+    Seq(col("doc_id")),
+    Seq(Artifact.Additive("counts", (d, _) => LanguageModel.tokenCounts(d), Seq("token"), "c"),
+      Artifact.Additive("counts2", (d, _) => bigramCounts(d), Seq("prev", "cur"), "c")))
+
+  /** Build-if-needed bigram model over the corpus, guarded by the
+    * corpus content fingerprint. Returns the artifact dir.
     */
   def ensureLm2(spark: SparkSession, docs: DataFrame, dir: String): String =
-    Artifact.ensure(spark, dir,
-      MetaPrefix + s"unit=ws fp=${Artifact.fingerprint(docs, col("doc_id"), col("text"))}") {
-      LanguageModel.tokenCounts(docs).write.mode("overwrite").parquet(s"$dir/counts")
-      bigramCounts(docs).write.mode("overwrite").parquet(s"$dir/counts2")
-      docs.select(col("doc_id"), lit(0L).as("gen"))
-        .write.mode("overwrite").parquet(s"$dir/ids")
-      Artifact.clearTombstones(spark, dir)
-      Artifact.writeNextGen(spark, dir, 1L)
-    }
-
-  private def liveIds(spark: SparkSession, dir: String): DataFrame =
-    Artifact.maskTombstones(spark, dir, spark.read.parquet(s"$dir/ids"))
-      .select(col("doc_id"))
-
-  /** O(batch) append: both ledgers take the batch's own aggregates as
-    * deltas. Same idempotency / duplicate-id / crash-atomicity contract
-    * as [[LanguageModel.appendLm]].
-    */
-  def appendLm2(spark: SparkSession, batch: DataFrame, dir: String): Unit = {
-    Artifact.requireKind(spark, dir, MetaPrefix)
-    if (batch.groupBy(col("doc_id")).count().filter(col("count") > 1).take(1).nonEmpty)
-      throw new IllegalArgumentException(
-        "bigram-LM append batch contains duplicate doc_ids — dedupe upstream first")
-    val fresh = batch
-      .join(broadcast(batch.select(col("doc_id"))
-          .join(liveIds(spark, dir), Seq("doc_id"), "left_semi")),
-        Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("text")).localCheckpoint()
-    if (!fresh.isEmpty) {
-      val gen = Artifact.readNextGen(spark, dir)
-      Artifact.beginMutation(spark, dir)
-      LanguageModel.tokenCounts(fresh).write.mode("append").parquet(s"$dir/counts")
-      bigramCounts(fresh).write.mode("append").parquet(s"$dir/counts2")
-      fresh.select(col("doc_id"), lit(gen).as("gen"))
-        .write.mode("append").parquet(s"$dir/ids")
-      Artifact.writeNextGen(spark, dir, gen + 1L)
-      Artifact.addToFingerprint(spark, dir, MetaPrefix,
-        Artifact.fingerprint(fresh, col("doc_id"), col("text")))
-      Artifact.endMutation(spark, dir)
-    }
-  }
-
-  /** O(removed) deletion: negative deltas on BOTH ledgers, recounted
-    * from the removed texts; ids masked via the shared tombstone set;
-    * fingerprint subtracted. [[LanguageModel.removeLm]]'s contract.
-    */
-  def removeLm2(spark: SparkSession, removedDocs: DataFrame, dir: String): Unit = {
-    Artifact.requireKind(spark, dir, MetaPrefix)
-    val removed = removedDocs.select(col("doc_id"), col("text"))
-      .join(broadcast(removedDocs.select(col("doc_id"))
-          .join(liveIds(spark, dir), Seq("doc_id"), "left_semi")),
-        Seq("doc_id"), "left_semi")
-      .localCheckpoint()
-    if (!removed.isEmpty) {
-      Artifact.beginMutation(spark, dir)
-      LanguageModel.tokenCounts(removed).select(col("token"), (-col("c")).as("c"))
-        .write.mode("append").parquet(s"$dir/counts")
-      bigramCounts(removed)
-        .select(col("prev"), col("cur"), (-col("c")).as("c"))
-        .write.mode("append").parquet(s"$dir/counts2")
-      val tgen = Artifact.readNextGen(spark, dir)
-      Artifact.appendTombstones(spark, dir,
-        removed.select(col("doc_id"), lit(tgen).as("tgen")))
-      Artifact.subtractFromFingerprint(spark, dir, MetaPrefix,
-        Artifact.fingerprint(removed, col("doc_id"), col("text")))
-      Artifact.endMutation(spark, dir)
-    }
-  }
-
-  /** Compact both ledgers (per-key deltas merged, non-positive nets
-    * dropped), drop masked id rows, clear tombstones. Metadata
-    * untouched.
-    */
-  def compactLm2(spark: SparkSession, dir: String): (Int, Int) = {
-    val (b1, a1) = Artifact.compactParquet(spark, dir, "counts",
-      merge = _.groupBy(col("token")).agg(sum(col("c")).as("c"))
-        .filter(col("c") > 0))
-    val (b2, a2) = Artifact.compactParquet(spark, dir, "counts2",
-      merge = _.groupBy(col("prev"), col("cur")).agg(sum(col("c")).as("c"))
-        .filter(col("c") > 0))
-    val idsMerge: DataFrame => DataFrame =
-      if (!Artifact.hasTombstones(spark, dir)) identity
-      else {
-        val tombstones = Artifact.loadTombstones(spark, dir).localCheckpoint()
-        _.join(broadcast(tombstones), Seq("doc_id"), "left")
-          .filter(col("tgen").isNull || col("gen") >= col("tgen"))
-          .drop("tgen")
-      }
-    val (b3, a3) = Artifact.compactParquet(spark, dir, "ids", merge = idsMerge)
-    Artifact.clearTombstones(spark, dir)
-    (b1 + b2 + b3, a1 + a2 + a3)
-  }
+    ledger.ensure(spark, docs, dir, "unit=ws")
 
   /** Score documents against the stored model: per-document token
     * count and interpolated mean negative log-likelihood,

@@ -53,115 +53,23 @@ object Classifier {
   def classDocCounts(labeled: DataFrame): DataFrame =
     labeled.groupBy(col("label")).agg(count(lit(1)).as("n_docs"))
 
-  /** Build-if-needed NB model over a labeled seed set `(doc_id, text,
-    * label)`: both count ledgers plus a gen-stamped id ledger (append
-    * idempotency + removal masking), guarded by the seed content
-    * fingerprint. Returns the artifact dir.
+  /** The model's lifecycle ([[Artifact.DocLedger]]): the
+    * per-(label, token) `counts/` and per-label `docs/` ledgers plus
+    * the gen-stamped id ledger over a labeled seed set
+    * `(doc_id, text, label)`. A removal must carry the indexed label
+    * too — a forgotten document must leave the classifier, or its text
+    * keeps shaping corpus admission.
+    */
+  private[graft] val ledger = Artifact.DocLedger(MetaPrefix, Seq("doc_id", "text", "label"),
+    Seq(col("doc_id")),
+    Seq(Artifact.Additive("counts", (d, _) => classTokenCounts(d), Seq("label", "token"), "c"),
+      Artifact.Additive("docs", (d, _) => classDocCounts(d), Seq("label"), "n_docs")))
+
+  /** Build-if-needed NB model over a labeled seed set, guarded by the
+    * seed content fingerprint. Returns the artifact dir.
     */
   def ensureNb(spark: SparkSession, labeled: DataFrame, dir: String): String =
-    Artifact.ensure(spark, dir,
-      MetaPrefix + "unit=ws fp=" +
-        Artifact.fingerprint(labeled, col("doc_id"), col("text"), col("label"))) {
-      classTokenCounts(labeled).write.mode("overwrite").parquet(s"$dir/counts")
-      classDocCounts(labeled).write.mode("overwrite").parquet(s"$dir/docs")
-      labeled.select(col("doc_id"), lit(0L).as("gen"))
-        .write.mode("overwrite").parquet(s"$dir/ids")
-      Artifact.clearTombstones(spark, dir)
-      Artifact.writeNextGen(spark, dir, 1L)
-    }
-
-  /** The id ledger with logical deletes applied — shared by the append
-    * anti-join and the removal semi-join ([[LanguageModel.liveIds]]'
-    * exact analog).
-    */
-  private def liveIds(spark: SparkSession, dir: String): DataFrame =
-    Artifact.maskTombstones(spark, dir, spark.read.parquet(s"$dir/ids"))
-      .select(col("doc_id"))
-
-  /** Fold a labeled batch into the stored model in O(batch): both
-    * ledgers are additive, so the append writes the batch's own count
-    * aggregates as deltas. Idempotent via the id ledger; intra-batch
-    * duplicate ids fail fast (they would double-count); the additive
-    * fingerprint keeps a later [[ensureNb]] over the union seed
-    * serving. Crash-atomic under the pending marker.
-    */
-  def appendNb(spark: SparkSession, batch: DataFrame, dir: String): Unit = {
-    Artifact.requireKind(spark, dir, MetaPrefix)
-    if (batch.groupBy(col("doc_id")).count().filter(col("count") > 1).take(1).nonEmpty)
-      throw new IllegalArgumentException(
-        "NB append batch contains duplicate doc_ids — dedupe upstream first")
-    val fresh = batch
-      .join(broadcast(batch.select(col("doc_id"))
-          .join(liveIds(spark, dir), Seq("doc_id"), "left_semi")),
-        Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("text"), col("label")).localCheckpoint()
-    if (!fresh.isEmpty) {
-      val gen = Artifact.readNextGen(spark, dir)
-      Artifact.beginMutation(spark, dir)
-      classTokenCounts(fresh).write.mode("append").parquet(s"$dir/counts")
-      classDocCounts(fresh).write.mode("append").parquet(s"$dir/docs")
-      fresh.select(col("doc_id"), lit(gen).as("gen"))
-        .write.mode("append").parquet(s"$dir/ids")
-      Artifact.writeNextGen(spark, dir, gen + 1L)
-      Artifact.addToFingerprint(spark, dir, MetaPrefix,
-        Artifact.fingerprint(fresh, col("doc_id"), col("text"), col("label")))
-      Artifact.endMutation(spark, dir)
-    }
-  }
-
-  /** Delete seed documents from the stored model in O(removed) — the
-    * [[LanguageModel.removeLm]] analog (a forgotten document must leave
-    * the classifier too, or its text keeps shaping corpus admission).
-    * Membership-checked: only live seed ids produce deltas, so a
-    * retried removal is a no-op. `removedDocs` must carry the indexed
-    * (doc_id, text, label).
-    */
-  def removeNb(spark: SparkSession, removedDocs: DataFrame, dir: String): Unit = {
-    Artifact.requireKind(spark, dir, MetaPrefix)
-    val removed = removedDocs.select(col("doc_id"), col("text"), col("label"))
-      .join(broadcast(removedDocs.select(col("doc_id"))
-          .join(liveIds(spark, dir), Seq("doc_id"), "left_semi")),
-        Seq("doc_id"), "left_semi")
-      .localCheckpoint()
-    if (!removed.isEmpty) {
-      Artifact.beginMutation(spark, dir)
-      classTokenCounts(removed).select(col("label"), col("token"), (-col("c")).as("c"))
-        .write.mode("append").parquet(s"$dir/counts")
-      classDocCounts(removed).select(col("label"), (-col("n_docs")).as("n_docs"))
-        .write.mode("append").parquet(s"$dir/docs")
-      val tgen = Artifact.readNextGen(spark, dir)
-      Artifact.appendTombstones(spark, dir,
-        removed.select(col("doc_id"), lit(tgen).as("tgen")))
-      Artifact.subtractFromFingerprint(spark, dir, MetaPrefix,
-        Artifact.fingerprint(removed, col("doc_id"), col("text"), col("label")))
-      Artifact.endMutation(spark, dir)
-    }
-  }
-
-  /** Compact the ledgers: per-key deltas merged back to one row,
-    * non-positive nets dropped (consumer-equivalent — the serve paths
-    * filter them at read), masked id rows dropped, tombstones cleared.
-    * Metadata untouched.
-    */
-  def compactNb(spark: SparkSession, dir: String): (Int, Int) = {
-    val (b1, a1) = Artifact.compactParquet(spark, dir, "counts",
-      merge = _.groupBy(col("label"), col("token")).agg(sum(col("c")).as("c"))
-        .filter(col("c") > 0))
-    val (b2, a2) = Artifact.compactParquet(spark, dir, "docs",
-      merge = _.groupBy(col("label")).agg(sum(col("n_docs")).as("n_docs"))
-        .filter(col("n_docs") > 0))
-    val idsMerge: DataFrame => DataFrame =
-      if (!Artifact.hasTombstones(spark, dir)) identity
-      else {
-        val tombstones = Artifact.loadTombstones(spark, dir).localCheckpoint()
-        _.join(broadcast(tombstones), Seq("doc_id"), "left")
-          .filter(col("tgen").isNull || col("gen") >= col("tgen"))
-          .drop("tgen")
-      }
-    val (b3, a3) = Artifact.compactParquet(spark, dir, "ids", merge = idsMerge)
-    Artifact.clearTombstones(spark, dir)
-    (b1 + b2 + b3, a1 + a2 + a3)
-  }
+    ledger.ensure(spark, labeled, dir, "unit=ws")
 
   /** Score documents against the stored model: one row per
     * (doc_id, label) with the rounded joint log-likelihood

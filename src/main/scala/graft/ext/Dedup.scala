@@ -253,8 +253,9 @@ object Dedup {
 
   // Insert generations + logical deletion use the shared artifact
   // machinery ([[Artifact.readNextGen]]/[[Artifact.maskTombstones]] and
-  // friends) — the same scheme backs the unigram LM's removal path
-  // ([[LanguageModel.removeLm]]). Local aliases keep call sites short.
+  // friends) — the same scheme backs every document ledger's removal
+  // path ([[Artifact.DocLedger.remove]]). Local aliases keep call sites
+  // short.
   private def readNextGen(spark: org.apache.spark.sql.SparkSession, dir: String): Long =
     Artifact.readNextGen(spark, dir)
   private def writeNextGen(spark: org.apache.spark.sql.SparkSession,
@@ -365,15 +366,8 @@ object Dedup {
     // harmless (tgen only ever masks generations that existed at
     // removal; everything retained is at or above it). With no
     // tombstones the bands rewrite stays a pure re-size (no join).
-    val bandsMerge: DataFrame => DataFrame =
-      if (!hasTombstones(spark, dir)) identity
-      else {
-        val tombstones = loadTombstones(spark, dir).localCheckpoint()
-        _.join(broadcast(tombstones), Seq("doc_id"), "left")
-          .filter(col("tgen").isNull || col("gen") >= col("tgen"))
-          .drop("tgen")
-      }
-    val (b0, b1) = Artifact.compactParquet(spark, dir, "bands", merge = bandsMerge)
+    val (b0, b1) = Artifact.compactParquet(spark, dir, "bands",
+      merge = Artifact.maskTombstones(spark, dir, _))
     Artifact.clearTombstones(spark, dir)
     val (s0, s1) = Artifact.compactParquet(spark, dir, "sizes",
       merge = _.groupBy(col("band"), col("bucket")).agg(sum(col("m")).as("m")))

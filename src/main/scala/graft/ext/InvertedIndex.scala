@@ -57,135 +57,36 @@ object InvertedIndex {
     docs.select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
 
-  private def docLengths(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), size(TextAnalysis.tokens(col("text"))).cast("long").as("dl"))
-
-  private def meta(docs: DataFrame, nBuckets: Int): String =
-    MetaPrefix + s"unit=ws buckets=$nBuckets " +
-      s"fp=${Artifact.fingerprint(docs, col("doc_id"), col("text"))}"
+  /** The index's lifecycle ([[Artifact.DocLedger]]): the bucketed
+    * `postings/` ledger, laid out with the bucket count of the meta
+    * line, and the `(doc_id, dl, gen)` id ledger over `(doc_id, text)`.
+    * Postings need no masking at read: a removed doc's rows net to
+    * tf ≤ 0 and are excluded by the read-side filter.
+    */
+  private[graft] val ledger = Artifact.DocLedger(MetaPrefix, Seq("doc_id", "text"),
+    Seq(col("doc_id"), size(TextAnalysis.tokens(col("text"))).cast("long").as("dl")),
+    Seq(Artifact.Additive("postings",
+      (d, meta) => termFreqs(d).withColumn("bucket", bucketCol(col("term"), bucketsIn(meta))),
+      Seq("term", "doc_id"), "tf", partitionBy = Seq("bucket"))))
 
   /** Build-if-needed inverted index over the corpus, guarded by the
     * corpus content fingerprint. Returns the artifact dir.
     */
   def ensureIndex(spark: SparkSession, docs: DataFrame, dir: String,
                   nBuckets: Int = DefaultBuckets): String =
-    Artifact.ensure(spark, dir, meta(docs, nBuckets)) {
-      termFreqs(docs)
-        .withColumn("bucket", bucketCol(col("term"), nBuckets))
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/postings")
-      docLengths(docs).withColumn("gen", lit(0L))
-        .write.mode("overwrite").parquet(s"$dir/ids")
-      Artifact.clearTombstones(spark, dir)
-      Artifact.writeNextGen(spark, dir, 1L)
-    }
+    ledger.ensure(spark, docs, dir, s"unit=ws buckets=$nBuckets")
 
-  /** The stored bucket count, parsed from the metadata line — queries
-    * must hash terms with the modulus the build wrote.
+  /** The bucket count of a metadata line — terms must be hashed with
+    * the modulus the build wrote.
     */
-  private def storedBuckets(spark: SparkSession, dir: String): Int = {
-    val m = Artifact.readMeta(spark, dir).getOrElse("")
-    """buckets=(\d+)""".r.findFirstMatchIn(m) match {
+  private def bucketsIn(meta: String): Int =
+    """buckets=(\d+)""".r.findFirstMatchIn(meta) match {
       case Some(g) => g.group(1).toInt
-      case None => throw new IllegalStateException(s"no bucket count in meta at $dir: $m")
+      case None => throw new IllegalStateException(s"no bucket count in meta: $meta")
     }
-  }
 
-  /** The id ledger with logical deletes applied — shared by append
-    * (removed docs are re-insertable) and removal (only live docs can
-    * be removed), and the source of truth for N and avgdl.
-    */
-  private def liveIds(spark: SparkSession, dir: String): DataFrame =
-    Artifact.maskTombstones(spark, dir, spark.read.parquet(s"$dir/ids"))
-
-  /** Fold a document batch into the stored index in O(batch) — postings
-    * and doc lengths are additive, so the append writes the batch's own
-    * aggregates as ledger deltas; history is never rescanned. Idempotent
-    * via the id ledger; intra-batch duplicate ids fail fast (they would
-    * double-count into the additive fingerprint). Crash-atomic under the
-    * pending marker.
-    */
-  def appendIndex(spark: SparkSession, batch: DataFrame, dir: String): Unit = {
-    Artifact.requireKind(spark, dir, MetaPrefix)
-    if (batch.groupBy(col("doc_id")).count().filter(col("count") > 1).take(1).nonEmpty)
-      throw new IllegalArgumentException(
-        "index append batch contains duplicate doc_ids — dedupe upstream first")
-    val nBuckets = storedBuckets(spark, dir)
-    val fresh = batch
-      .join(broadcast(batch.select(col("doc_id"))
-          .join(liveIds(spark, dir).select(col("doc_id")), Seq("doc_id"), "left_semi")),
-        Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("text")).localCheckpoint()
-    if (!fresh.isEmpty) {
-      val gen = Artifact.readNextGen(spark, dir)
-      Artifact.beginMutation(spark, dir)
-      termFreqs(fresh)
-        .withColumn("bucket", bucketCol(col("term"), nBuckets))
-        .write.mode("append").partitionBy("bucket").parquet(s"$dir/postings")
-      docLengths(fresh).withColumn("gen", lit(gen))
-        .write.mode("append").parquet(s"$dir/ids")
-      Artifact.writeNextGen(spark, dir, gen + 1L)
-      Artifact.addToFingerprint(spark, dir, MetaPrefix,
-        Artifact.fingerprint(fresh, col("doc_id"), col("text")))
-      Artifact.endMutation(spark, dir)
-    }
-  }
-
-  /** Delete documents from the stored index in O(removed): negative tf
-    * deltas recounted from the removed texts (the caller passes the
-    * indexed text — the [[LanguageModel.removeLm]] contract), id rows
-    * masked via the shared tombstone set until [[compactIndex]] drops
-    * them physically, fingerprint adjusted arithmetically so a later
-    * [[ensureIndex]] over the shrunken corpus serves without a rebuild.
-    * Postings need no masking at read: a removed doc's rows net to
-    * tf ≤ 0 and are excluded by the read-side filter.
-    */
-  def removeIndex(spark: SparkSession, removedDocs: DataFrame, dir: String): Unit = {
-    Artifact.requireKind(spark, dir, MetaPrefix)
-    val nBuckets = storedBuckets(spark, dir)
-    val removed = removedDocs.select(col("doc_id"), col("text"))
-      .join(broadcast(removedDocs.select(col("doc_id"))
-          .join(liveIds(spark, dir).select(col("doc_id")), Seq("doc_id"), "left_semi")),
-        Seq("doc_id"), "left_semi")
-      .localCheckpoint()
-    if (!removed.isEmpty) {
-      Artifact.beginMutation(spark, dir)
-      termFreqs(removed).select(col("doc_id"), col("term"), (-col("tf")).as("tf"))
-        .withColumn("bucket", bucketCol(col("term"), nBuckets))
-        .write.mode("append").partitionBy("bucket").parquet(s"$dir/postings")
-      val tgen = Artifact.readNextGen(spark, dir)
-      Artifact.appendTombstones(spark, dir,
-        removed.select(col("doc_id"), lit(tgen).as("tgen")))
-      Artifact.subtractFromFingerprint(spark, dir, MetaPrefix,
-        Artifact.fingerprint(removed, col("doc_id"), col("text")))
-      Artifact.endMutation(spark, dir)
-    }
-  }
-
-  /** Compact the ledgers after a run of appends/removals: per-(term,
-    * doc) deltas merged to one row with non-positive nets dropped
-    * (consumer-equivalent — the read side filters `tf > 0`), masked id
-    * rows dropped and the tombstone set cleared, the bucket layout
-    * preserved. Metadata untouched.
-    */
-  def compactIndex(spark: SparkSession, dir: String): (Int, Int) = {
-    val (b1, a1) = Artifact.compactParquet(spark, dir, "postings",
-      partitionCols = Seq("bucket"),
-      merge = _.groupBy(col("bucket"), col("term"), col("doc_id"))
-        .agg(sum(col("tf")).as("tf"))
-        .filter(col("tf") > 0)
-        .select(col("term"), col("doc_id"), col("tf"), col("bucket")))
-    val idsMerge: DataFrame => DataFrame =
-      if (!Artifact.hasTombstones(spark, dir)) identity
-      else {
-        val tombstones = Artifact.loadTombstones(spark, dir).localCheckpoint()
-        _.join(broadcast(tombstones), Seq("doc_id"), "left")
-          .filter(col("tgen").isNull || col("gen") >= col("tgen"))
-          .drop("tgen")
-      }
-    val (b2, a2) = Artifact.compactParquet(spark, dir, "ids", merge = idsMerge)
-    Artifact.clearTombstones(spark, dir)
-    (b1 + b2, a1 + a2)
-  }
+  private def storedBuckets(spark: SparkSession, dir: String): Int =
+    bucketsIn(Artifact.readMeta(spark, dir).getOrElse(""))
 
   /** Net live postings for a term set: the query terms are hashed to
     * their buckets with a tiny local plan (bounded by |terms|), and the
@@ -220,7 +121,7 @@ object InvertedIndex {
                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val matched = postingsFor(spark, dir, query.split(" ").toSeq.filter(_.nonEmpty))
     val dfTable = matched.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val ids = liveIds(spark, dir)
+    val ids = ledger.liveIds(spark, dir)
     val stats = ids.agg(count(lit(1)).as("n_docs"),
       (sum(col("dl")) * lit(1.0) / count(lit(1))).as("avgdl"))
     matched

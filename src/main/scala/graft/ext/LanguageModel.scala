@@ -42,130 +42,24 @@ object LanguageModel {
 
   private[graft] val MetaPrefix = "unigramlm v2 "
 
-  /** Build-if-needed unigram model over the corpus: the count ledger
-    * plus a gen-stamped id ledger (append idempotency + removal
-    * masking), guarded by the corpus content fingerprint. Returns the
-    * artifact dir.
-    */
-  def ensureLm(spark: SparkSession, docs: DataFrame, dir: String): String =
-    Artifact.ensure(spark, dir,
-      // `unit=ws` names the tokenizer (whitespace): a swapped tokenizer
-      // must read as a different model — and the parameter keeps the
-      // line in the `<prefix> fp=` grammar the additive-append parser
-      // expects (the prefix group is everything before " fp=")
-      MetaPrefix + s"unit=ws fp=${Artifact.fingerprint(docs, col("doc_id"), col("text"))}") {
-      tokenCounts(docs).write.mode("overwrite").parquet(s"$dir/counts")
-      docs.select(col("doc_id"), lit(0L).as("gen"))
-        .write.mode("overwrite").parquet(s"$dir/ids")
-      // a fresh build has nothing logically deleted
-      Artifact.clearTombstones(spark, dir)
-      Artifact.writeNextGen(spark, dir, 1L)
-    }
-
-  /** The id ledger with logical deletes applied — the one definition of
-    * "indexed" shared by the append anti-join (a removed doc must be
-    * re-insertable) and the removal semi-join (only live docs can be
-    * removed).
-    */
-  private def liveIds(spark: SparkSession, dir: String): DataFrame =
-    Artifact.maskTombstones(spark, dir, spark.read.parquet(s"$dir/ids"))
-      .select(col("doc_id"))
-
-  /** Fold a document batch into the stored model in O(batch): counts
-    * are additive, so the append is the batch's OWN count aggregate
-    * written as ledger deltas — history is never recounted. Idempotent
-    * via the id ledger (a double-submitted batch is a no-op); a doc
-    * removed by [[removeLm]] is NOT treated as indexed, so re-insertion
-    * works — its new id row's generation clears the tombstone's mask.
-    * The additive fingerprint keeps a later [[ensureLm]] over the union
-    * corpus serving without a rebuild. Crash-atomic under the pending
-    * marker like the other append paths.
-    */
-  def appendLm(spark: SparkSession, batch: DataFrame, dir: String): Unit = {
-    Artifact.requireKind(spark, dir, MetaPrefix)
-    // an intra-batch duplicate id would double-count its tokens in the
-    // ledger and bake two id rows into the additive fingerprint (the
-    // idempotency anti-join only sees STORED ids) — fail fast, the same
-    // contract as [[TrainingSet.appendShards]]
-    if (batch.groupBy(col("doc_id")).count().filter(col("count") > 1).take(1).nonEmpty)
-      throw new IllegalArgumentException(
-        "LM append batch contains duplicate doc_ids — dedupe upstream first")
-    val fresh = batch
-      .join(broadcast(batch.select(col("doc_id"))
-          .join(liveIds(spark, dir), Seq("doc_id"), "left_semi")),
-        Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("text")).localCheckpoint()
-    if (!fresh.isEmpty) {
-      val gen = Artifact.readNextGen(spark, dir)
-      Artifact.beginMutation(spark, dir)
-      tokenCounts(fresh).write.mode("append").parquet(s"$dir/counts")
-      fresh.select(col("doc_id"), lit(gen).as("gen"))
-        .write.mode("append").parquet(s"$dir/ids")
-      Artifact.writeNextGen(spark, dir, gen + 1L)
-      Artifact.addToFingerprint(spark, dir, MetaPrefix,
-        Artifact.fingerprint(fresh, col("doc_id"), col("text")))
-      Artifact.endMutation(spark, dir)
-    }
-  }
-
-  /** Delete documents from the stored model in O(removed) — the
-    * [[Dedup.removeFromBandIndex]] analog, so the right-to-be-forgotten
-    * lifecycle covers the LM artifact too:
-    *  - the docs' token counts are corrected with NEGATIVE ledger
-    *    deltas, recounted from their texts (deterministic — the caller
-    *    passes the indexed text, the same contract as the band index's
-    *    removal; history is never rescanned),
-    *  - their id rows are masked via the shared `(doc_id, tgen)`
-    *    tombstone set ([[Artifact.appendTombstones]]) until
-    *    [[compactLm]] drops them physically,
-    *  - the stored fingerprint is adjusted arithmetically, so a later
-    *    [[ensureLm]] over the shrunken corpus SERVES instead of
-    *    rebuilding.
+  /** The model's lifecycle ([[Artifact.DocLedger]]): the `counts/`
+    * token ledger plus the gen-stamped id ledger over `(doc_id, text)`.
     * [[vocab]] needs no masking at read: a fully-removed token nets to
     * a non-positive ledger sum and is excluded by the `c > 0` filter.
     */
-  def removeLm(spark: SparkSession, removedDocs: DataFrame, dir: String): Unit = {
-    Artifact.requireKind(spark, dir, MetaPrefix)
-    val removed = removedDocs.select(col("doc_id"), col("text"))
-      .join(broadcast(removedDocs.select(col("doc_id"))
-          .join(liveIds(spark, dir), Seq("doc_id"), "left_semi")),
-        Seq("doc_id"), "left_semi")
-      .localCheckpoint()
-    if (!removed.isEmpty) {
-      Artifact.beginMutation(spark, dir)
-      tokenCounts(removed).select(col("token"), (-col("c")).as("c"))
-        .write.mode("append").parquet(s"$dir/counts")
-      val tgen = Artifact.readNextGen(spark, dir)
-      Artifact.appendTombstones(spark, dir,
-        removed.select(col("doc_id"), lit(tgen).as("tgen")))
-      Artifact.subtractFromFingerprint(spark, dir, MetaPrefix,
-        Artifact.fingerprint(removed, col("doc_id"), col("text")))
-      Artifact.endMutation(spark, dir)
-    }
-  }
+  private[graft] val ledger = Artifact.DocLedger(MetaPrefix, Seq("doc_id", "text"),
+    Seq(col("doc_id")),
+    Seq(Artifact.Additive("counts", (d, _) => tokenCounts(d), Seq("token"), "c")))
 
-  /** Compact the ledgers after a run of appends/removals: per-token
-    * deltas merged back to one row and non-positive nets dropped
-    * (consumer-equivalent — [[vocab]] filters `c > 0` at read), masked
-    * id rows dropped and the tombstone set cleared, files re-sized.
-    * Metadata untouched.
+  /** Build-if-needed unigram model over the corpus, guarded by the
+    * corpus content fingerprint. Returns the artifact dir.
     */
-  def compactLm(spark: SparkSession, dir: String): (Int, Int) = {
-    val (b1, a1) = Artifact.compactParquet(spark, dir, "counts",
-      merge = _.groupBy(col("token")).agg(sum(col("c")).as("c"))
-        .filter(col("c") > 0))
-    val idsMerge: DataFrame => DataFrame =
-      if (!Artifact.hasTombstones(spark, dir)) identity
-      else {
-        val tombstones = Artifact.loadTombstones(spark, dir).localCheckpoint()
-        _.join(broadcast(tombstones), Seq("doc_id"), "left")
-          .filter(col("tgen").isNull || col("gen") >= col("tgen"))
-          .drop("tgen")
-      }
-    val (b2, a2) = Artifact.compactParquet(spark, dir, "ids", merge = idsMerge)
-    Artifact.clearTombstones(spark, dir)
-    (b1 + b2, a1 + a2)
-  }
+  def ensureLm(spark: SparkSession, docs: DataFrame, dir: String): String =
+    // `unit=ws` names the tokenizer (whitespace): a swapped tokenizer
+    // must read as a different model — and the parameter keeps the
+    // line in the `<prefix> fp=` grammar the additive-append parser
+    // expects (the prefix group is everything before " fp=")
+    ledger.ensure(spark, docs, dir, "unit=ws")
 
   /** The model's serving form: top-`vocabSize` tokens by corpus count
     * (count-desc, token-asc — deterministic at the boundary), summed

@@ -333,7 +333,7 @@ object TrainingSet {
     * same policy as the ANN indexes). `removed` must carry
     * (doc_id, text, lang): the removed CONTENT, for the ledger deltas.
     *
-    * Idempotent and membership-checked, like [[LanguageModel.removeLm]]:
+    * Idempotent and membership-checked, like [[Artifact.DocLedger.remove]]:
     * the batch is semi-joined against the export's LIVE id set (ids
     * minus existing tombstones) before any delta is computed, so a
     * retried removal or a never-exported id is a no-op — without the
@@ -421,9 +421,7 @@ object TrainingSet {
     val b = batch.select(col("doc_id"), col("text"), col("lang")).localCheckpoint()
     // an intra-batch duplicate id would ship the document twice in one
     // append (the idempotency check only sees STORED ids) — fail fast
-    if (b.groupBy(col("doc_id")).count().filter(col("count") > 1).take(1).nonEmpty)
-      throw new IllegalArgumentException(
-        "export batch contains duplicate doc_ids — dedupe upstream first")
+    Artifact.DocLedger.requireUniqueIds(b, "export batch")
     // a removed-but-not-yet-compacted id may not be re-exported: its
     // masked JSONL row would unmask as a duplicate (no generation column
     // in the data files) — delete → compact → re-insert, as with the ANN

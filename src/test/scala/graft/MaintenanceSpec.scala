@@ -80,7 +80,7 @@ class MaintenanceSpec extends SparkSuite {
     def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
     graft.ext.LanguageModel.ensureLm(spark, docs((1L, "a b a")), lmDir)
     (2 to 6).foreach(i =>
-      graft.ext.LanguageModel.appendLm(spark, docs((i.toLong, "a b c")), lmDir))
+      graft.ext.LanguageModel.ledger.append(spark, docs((i.toLong, "a b c")), lmDir))
     val meta = Artifact.readMeta(spark, lmDir)
     val vocab = graft.ext.LanguageModel.vocab(spark, lmDir, 10)
       .as[(String, Long)].collect().toSeq

@@ -10,8 +10,9 @@ import scala.util.matching.Regex
   * [[graft.ext.ArtifactCache]] (README, *Caching*); every listener goes
   * through [[graft.Profile]] (README, *Profiling*); connected
   * components have one distributed engine, behind
-  * [[graft.ext.Dedup.duplicateGroups]]; and a new `main` takes a
-  * deliberate edit here.
+  * [[graft.ext.Dedup.duplicateGroups]]; document-keyed delta ledgers
+  * have one lifecycle, [[graft.ext.Artifact.DocLedger]]; and a new
+  * `main` takes a deliberate edit here.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -51,6 +52,21 @@ class SourceGuardSpec extends AnyFunSuite {
     val banned = Seq("star" + "Contraction", "same" + "EdgeSet", "applyDedup" + "Local")
     val found = for {
       p <- scalaFiles("src")
+      (line, i) <- lines(p).zipWithIndex
+      if banned.exists(line.contains)
+    } yield s"$p:${i + 1}: ${line.trim}"
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("the document-ledger artifacts carry no copy of the Artifact.DocLedger lifecycle") {
+    val banned = Seq("beginMutation", "appendTombstones", "addToFingerprint",
+      "subtractFromFingerprint", "writeNextGen", """.count().filter(col("count") > 1)""")
+    val homes = Set("LanguageModel.scala", "BigramModel.scala", "Classifier.scala",
+      "InvertedIndex.scala")
+    val checked = sources.filter(p => homes.contains(p.getFileName.toString))
+    assert(checked.map(_.getFileName.toString).toSet == homes)
+    val found = for {
+      p <- checked
       (line, i) <- lines(p).zipWithIndex
       if banned.exists(line.contains)
     } yield s"$p:${i + 1}: ${line.trim}"

@@ -121,17 +121,17 @@ class BigramModelSpec extends SparkSuite {
     val inc = freshDir("append_inc")
     val ref = freshDir("append_ref")
     BigramModel.ensureLm2(spark, half1, inc)
-    BigramModel.appendLm2(spark, half2, inc)
+    BigramModel.ledger.append(spark, half2, inc)
     BigramModel.ensureLm2(spark, half1.unionByName(half2), ref)
     assert(Artifact.readMeta(spark, inc) == Artifact.readMeta(spark, ref))
     val batch = docs((9L, "x y z q"), (10L, "y y"))
     assert(BigramModel.score2(spark, batch, inc).collect().toSeq ==
       BigramModel.score2(spark, batch, ref).collect().toSeq)
     val meta = Artifact.readMeta(spark, inc)
-    BigramModel.appendLm2(spark, half2, inc)
+    BigramModel.ledger.append(spark, half2, inc)
     assert(Artifact.readMeta(spark, inc) == meta, "double-submit is a no-op")
     intercept[IllegalArgumentException] {
-      BigramModel.appendLm2(spark, docs((7L, "a"), (7L, "a")), inc)
+      BigramModel.ledger.append(spark, docs((7L, "a"), (7L, "a")), inc)
     }
     assert(Artifact.readMeta(spark, inc) == meta)
   }
@@ -142,7 +142,7 @@ class BigramModelSpec extends SparkSuite {
     val inc = freshDir("remove_inc")
     val ref = freshDir("remove_ref")
     BigramModel.ensureLm2(spark, keep.unionByName(gone), inc)
-    BigramModel.removeLm2(spark, gone, inc)
+    BigramModel.ledger.remove(spark, gone, inc)
     BigramModel.ensureLm2(spark, keep, ref)
     assert(Artifact.readMeta(spark, inc) == Artifact.readMeta(spark, ref),
       "subtracted fingerprint must land on the surviving corpus's")
@@ -151,9 +151,9 @@ class BigramModelSpec extends SparkSuite {
       BigramModel.score2(spark, batch, ref).collect().toSeq,
       "netted-out tokens and transitions must leave both ledgers")
     val meta = Artifact.readMeta(spark, inc)
-    BigramModel.removeLm2(spark, gone, inc)
+    BigramModel.ledger.remove(spark, gone, inc)
     assert(Artifact.readMeta(spark, inc) == meta, "double-remove is a no-op")
-    BigramModel.compactLm2(spark, inc)
+    BigramModel.ledger.compact(spark, inc)
     assert(!Artifact.hasTombstones(spark, inc))
     assert(BigramModel.score2(spark, batch, inc).collect().toSeq ==
       BigramModel.score2(spark, batch, ref).collect().toSeq)

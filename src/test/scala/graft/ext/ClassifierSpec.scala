@@ -80,7 +80,7 @@ class ClassifierSpec extends SparkSuite {
     val inc = freshDir("append_inc")
     val ref = freshDir("append_ref")
     Classifier.ensureNb(spark, half1, inc)
-    Classifier.appendNb(spark, half2, inc)
+    Classifier.ledger.append(spark, half2, inc)
     Classifier.ensureNb(spark, half1.unionByName(half2), ref)
     assert(Artifact.readMeta(spark, inc) == Artifact.readMeta(spark, ref),
       "additive fingerprint must land on the full seed's")
@@ -89,11 +89,11 @@ class ClassifierSpec extends SparkSuite {
       Classifier.score(spark, batch, ref).collect().toSeq)
     // double-submit: no-op
     val meta = Artifact.readMeta(spark, inc)
-    Classifier.appendNb(spark, half2, inc)
+    Classifier.ledger.append(spark, half2, inc)
     assert(Artifact.readMeta(spark, inc) == meta)
     // intra-batch duplicate id: fail fast, artifact untouched
     intercept[IllegalArgumentException] {
-      Classifier.appendNb(spark,
+      Classifier.ledger.append(spark,
         labeled((7L, "a", "hi"), (7L, "a", "hi")), inc)
     }
     assert(Artifact.readMeta(spark, inc) == meta)
@@ -105,7 +105,7 @@ class ClassifierSpec extends SparkSuite {
     val inc = freshDir("remove_inc")
     val ref = freshDir("remove_ref")
     Classifier.ensureNb(spark, keep.unionByName(gone), inc)
-    Classifier.removeNb(spark, gone, inc)
+    Classifier.ledger.remove(spark, gone, inc)
     Classifier.ensureNb(spark, keep, ref)
     assert(Artifact.readMeta(spark, inc) == Artifact.readMeta(spark, ref),
       "subtracted fingerprint must land on the surviving seed's")
@@ -114,10 +114,10 @@ class ClassifierSpec extends SparkSuite {
       Classifier.score(spark, batch, ref).collect().toSeq,
       "`zz` netted to zero must be out of the vocabulary")
     val meta = Artifact.readMeta(spark, inc)
-    Classifier.removeNb(spark, gone, inc)
+    Classifier.ledger.remove(spark, gone, inc)
     assert(Artifact.readMeta(spark, inc) == meta, "double-remove must be a no-op")
     // compaction: same scores, tombstones cleared, deltas merged
-    Classifier.compactNb(spark, inc)
+    Classifier.ledger.compact(spark, inc)
     assert(!Artifact.hasTombstones(spark, inc))
     assert(Classifier.score(spark, batch, inc).collect().toSeq ==
       Classifier.score(spark, batch, ref).collect().toSeq)

@@ -54,7 +54,7 @@ class InvertedIndexSpec extends SparkSuite {
     val inc = freshDir("append_inc")
     val ref = freshDir("append_ref")
     InvertedIndex.ensureIndex(spark, half1, inc)
-    InvertedIndex.appendIndex(spark, half2, inc)
+    InvertedIndex.ledger.append(spark, half2, inc)
     InvertedIndex.ensureIndex(spark, half1.unionByName(half2), ref)
     assert(Artifact.readMeta(spark, inc) == Artifact.readMeta(spark, ref),
       "additive fingerprint must land on the full corpus fingerprint")
@@ -71,10 +71,10 @@ class InvertedIndexSpec extends SparkSuite {
     val d = freshDir("idem")
     InvertedIndex.ensureIndex(spark, corpus3, d)
     val metaBefore = Artifact.readMeta(spark, d)
-    InvertedIndex.appendIndex(spark, docs((2L, "a c")), d)
+    InvertedIndex.ledger.append(spark, docs((2L, "a c")), d)
     assert(Artifact.readMeta(spark, d) == metaBefore, "double submit is a no-op")
     intercept[IllegalArgumentException] {
-      InvertedIndex.appendIndex(spark, docs((9L, "x"), (9L, "x")), d)
+      InvertedIndex.ledger.append(spark, docs((9L, "x"), (9L, "x")), d)
     }
   }
 
@@ -84,7 +84,7 @@ class InvertedIndexSpec extends SparkSuite {
     val d = freshDir("remove")
     val ref = freshDir("remove_ref")
     InvertedIndex.ensureIndex(spark, keep.unionByName(gone), d)
-    InvertedIndex.removeIndex(spark, gone, d)
+    InvertedIndex.ledger.remove(spark, gone, d)
     InvertedIndex.ensureIndex(spark, keep, ref)
     assert(Artifact.readMeta(spark, d) == Artifact.readMeta(spark, ref),
       "subtracted fingerprint must equal the remnant corpus fingerprint")
@@ -92,7 +92,7 @@ class InvertedIndexSpec extends SparkSuite {
     val qr = InvertedIndex.searchBm25(spark, ref, "a b c", 10).collect().toSeq
     assert(qi == qr, "N, avgdl, df and tf must all reflect the removal")
     val metaAfter = Artifact.readMeta(spark, d)
-    InvertedIndex.removeIndex(spark, gone, d)
+    InvertedIndex.ledger.remove(spark, gone, d)
     assert(Artifact.readMeta(spark, d) == metaAfter, "double remove is a no-op")
   }
 
@@ -100,8 +100,8 @@ class InvertedIndexSpec extends SparkSuite {
     val d = freshDir("reinsert")
     val ref = freshDir("reinsert_ref")
     InvertedIndex.ensureIndex(spark, corpus3, d)
-    InvertedIndex.removeIndex(spark, docs((1L, "a a b")), d)
-    InvertedIndex.appendIndex(spark, docs((1L, "a")), d)
+    InvertedIndex.ledger.remove(spark, docs((1L, "a a b")), d)
+    InvertedIndex.ledger.append(spark, docs((1L, "a")), d)
     InvertedIndex.ensureIndex(spark,
       docs((1L, "a"), (2L, "a c"), (3L, "b b b c")), ref)
     assert(Artifact.readMeta(spark, d) == Artifact.readMeta(spark, ref))
@@ -114,12 +114,12 @@ class InvertedIndexSpec extends SparkSuite {
     val d = freshDir("compact")
     InvertedIndex.ensureIndex(spark, corpus3, d)
     (4L to 9L).foreach { i =>
-      InvertedIndex.appendIndex(spark, docs((i, s"a b term$i")), d)
+      InvertedIndex.ledger.append(spark, docs((i, s"a b term$i")), d)
     }
-    InvertedIndex.removeIndex(spark, docs((4L, "a b term4")), d)
+    InvertedIndex.ledger.remove(spark, docs((4L, "a b term4")), d)
     val before = InvertedIndex.searchBm25(spark, d, "a b c", 20).collect().toSeq
     val metaBefore = Artifact.readMeta(spark, d)
-    val (fb, fa) = InvertedIndex.compactIndex(spark, d)
+    val (fb, fa) = InvertedIndex.ledger.compact(spark, d)
     assert(fa < fb, s"compaction must shrink the file count ($fb -> $fa)")
     assert(Artifact.readMeta(spark, d) == metaBefore)
     assert(!Artifact.hasTombstones(spark, d), "masked rows dropped physically")

@@ -58,7 +58,7 @@ class LanguageModelSpec extends SparkSuite {
     val inc = freshDir("append_inc")
     val ref = freshDir("append_ref")
     LanguageModel.ensureLm(spark, half1, inc)
-    LanguageModel.appendLm(spark, half2, inc)
+    LanguageModel.ledger.append(spark, half2, inc)
     LanguageModel.ensureLm(spark, full, ref)
     assert(Artifact.readMeta(spark, inc) == Artifact.readMeta(spark, ref),
       "additive fingerprint must land on the full corpus fingerprint")
@@ -80,10 +80,10 @@ class LanguageModelSpec extends SparkSuite {
     val d = freshDir("idem")
     LanguageModel.ensureLm(spark, docs((1L, "a b")), d)
     val batch = docs((2L, "b c"))
-    LanguageModel.appendLm(spark, batch, d)
+    LanguageModel.ledger.append(spark, batch, d)
     val meta = Artifact.readMeta(spark, d)
     val v = LanguageModel.vocab(spark, d, 10).as[(String, Long)].collect().toSeq
-    LanguageModel.appendLm(spark, batch, d)
+    LanguageModel.ledger.append(spark, batch, d)
     assert(Artifact.readMeta(spark, d) == meta)
     assert(LanguageModel.vocab(spark, d, 10).as[(String, Long)].collect().toSeq == v)
   }
@@ -96,7 +96,7 @@ class LanguageModelSpec extends SparkSuite {
     // same id twice in one batch: the idempotency anti-join only sees
     // STORED ids, so without the guard the tokens would double-count
     intercept[IllegalArgumentException] {
-      LanguageModel.appendLm(spark, docs((2L, "b c"), (2L, "b c")), d)
+      LanguageModel.ledger.append(spark, docs((2L, "b c"), (2L, "b c")), d)
     }
     assert(Artifact.readMeta(spark, d) == meta, "failed append must not touch metadata")
     assert(LanguageModel.vocab(spark, d, 10).as[(String, Long)].collect().toSeq == v,
@@ -106,10 +106,10 @@ class LanguageModelSpec extends SparkSuite {
   test("compaction: fewer files, same vocab, metadata untouched") {
     val d = freshDir("compact")
     LanguageModel.ensureLm(spark, docs((1L, "a b")), d)
-    (2 to 6).foreach(i => LanguageModel.appendLm(spark, docs((i.toLong, "a b c")), d))
+    (2 to 6).foreach(i => LanguageModel.ledger.append(spark, docs((i.toLong, "a b c")), d))
     val meta = Artifact.readMeta(spark, d)
     val v = LanguageModel.vocab(spark, d, 10).as[(String, Long)].collect().toSeq
-    val (before, after) = LanguageModel.compactLm(spark, d)
+    val (before, after) = LanguageModel.ledger.compact(spark, d)
     assert(after < before, s"compaction must shrink the file count: $before -> $after")
     assert(Artifact.readMeta(spark, d) == meta)
     assert(LanguageModel.vocab(spark, d, 10).as[(String, Long)].collect().toSeq == v)
@@ -121,7 +121,7 @@ class LanguageModelSpec extends SparkSuite {
     val gone = docs((3L, "c d e zz zz"), (4L, "a zz"))
     val inc = freshDir("remove_inc")
     LanguageModel.ensureLm(spark, keep.unionByName(gone), inc)
-    LanguageModel.removeLm(spark, gone, inc)
+    LanguageModel.ledger.remove(spark, gone, inc)
 
     def assertEqualsFresh(corpus: org.apache.spark.sql.DataFrame, tag: String): Unit = {
       val ref = freshDir(s"remove_ref_$tag")
@@ -141,19 +141,19 @@ class LanguageModelSpec extends SparkSuite {
 
     // removal is idempotent: the docs are no longer live
     val meta = Artifact.readMeta(spark, inc)
-    LanguageModel.removeLm(spark, gone, inc)
+    LanguageModel.ledger.remove(spark, gone, inc)
     assert(Artifact.readMeta(spark, inc) == meta, "double-remove must be a no-op")
 
     // recycle id 3 with DIFFERENT text: the append must not treat the
     // masked id as indexed, and the model must equal a fresh build over
     // the new corpus (the old text's counts are gone, the new ones live)
     val recycled = docs((3L, "b q q"))
-    LanguageModel.appendLm(spark, recycled, inc)
+    LanguageModel.ledger.append(spark, recycled, inc)
     assertEqualsFresh(keep.unionByName(recycled), "after_recycle")
 
     // compaction drops masked id rows + netted-out tokens, clears the
     // tombstones, and changes nothing observable
-    LanguageModel.compactLm(spark, inc)
+    LanguageModel.ledger.compact(spark, inc)
     assert(!Artifact.hasTombstones(spark, inc), "compaction clears tombstones")
     assertEqualsFresh(keep.unionByName(recycled), "after_compact")
     val tokens = spark.read.parquet(s"$inc/counts")
